@@ -5,17 +5,26 @@ import org.apache.spark.sql.SparkSession
 /** Diagnostic (optimization rounds): drift-immune A/B of a code toggle.
   * Runs the named queries with a system property flipped 0/1 on
   * ALTERNATING passes inside ONE JVM, so the box's ~1.6-4x same-day speed
-  * band hits both arms equally; reports per-arm medians. Usage:
-  *   AB_PROP=graft.probe.signOnce AB_QUERIES=q_a,q_b AB_PASSES=6 \
+  * band hits both arms equally; reports per-arm medians. The toggle is
+  * REQUIRED — a default property would be one no code reads, and the
+  * run would compare two identical arms. Usage:
+  *   AB_PROP=graft.bm25.scanOnce AB_QUERIES=q_a,q_b AB_PASSES=6 \
   *     sbt "runMain graft.AB"
   */
 object AB {
+  val Usage: String =
+    "usage: AB_PROP=<system property> | AB_CONF=<session conf> " +
+      "[AB_VAL0=0] [AB_VAL1=1] [AB_QUERIES=q_a,q_b] [AB_PASSES=6] sbt \"runMain graft.AB\""
+
   def main(args: Array[String]): Unit = {
-    val prop = sys.env.getOrElse("AB_PROP", "graft.probe.signOnce")
     // AB_CONF set => arms flip a SESSION CONF instead of a system
     // property (diagnostic sizing only — e.g. how much of a family's
     // cost is AQE barriers; never a shipping change by itself)
-    val confKey = sys.env.get("AB_CONF")
+    val confKey = sys.env.get("AB_CONF").filter(_.nonEmpty)
+    val prop = confKey.orElse(sys.env.get("AB_PROP").filter(_.nonEmpty)).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val armVals = Array(
       sys.env.getOrElse("AB_VAL0", "0"), sys.env.getOrElse("AB_VAL1", "1"))
     val names = sys.env.getOrElse("AB_QUERIES", "q_dedup_index_probe")

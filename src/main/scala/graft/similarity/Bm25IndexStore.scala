@@ -39,18 +39,25 @@ import graft.text.Tokenize
   *     by the tombstone-count stamp,
   *   - `tombstones/` (optional): `(doc_id)` — logical deletes.
   *
-  * The serving plan is the scale contract: a query for `t` terms reads
-  * at most `t` of the `n_buckets` partition directories — the bucket
-  * literals prune STATICALLY (plain partition pruning, no runtime
-  * subquery needed) and the `token IN (...)` filter pushes into the
-  * parquet scan — then pivots per-doc term frequencies through ONE
-  * bounded exchange and takes a bounded top-k. `N`, `avgdl`, and each
+  * The serving plan is the scale contract: a query for `t` terms LISTS
+  * and reads at most `t` of the `n_buckets` partition directories —
+  * only the existing directories of its buckets are handed to the scan
+  * (the rest of the tree is never listed, so no serve pays a
+  * tree-sized file-listing job), the bucket literals stay STATIC
+  * partition filters (no runtime subquery needed), and the
+  * `token IN (...)` filter pushes into the parquet scan — then pivots
+  * per-doc term frequencies through ONE bounded exchange and takes a
+  * bounded top-k. `N`, `avgdl`, and each
   * `df(t)` become driver literals exactly like the in-session operator
   * (the df aggregate returns ≤ `t` rows), so served scores are
   * BIT-IDENTICAL to [[Bm25.search]] on the same corpus: same long/int
   * arithmetic widths, same sorted-term left-assoc float fold, same
   * round-before-cut contract (spec-pinned, and the served query shares
-  * the in-session oracle).
+  * the in-session oracle). The one-row `meta` and `stats` artifacts
+  * and the postings tree's schema and directory names are read once
+  * per FILE STATE ([[graft.util.SchemaMemo]]): only writes change them,
+  * and every write changes the freshness token. Postings and
+  * tombstones are re-read on every call; results are never reused.
   *
   * Takedowns ([[deleteFromBm25Index]]) are logical and EXACT: postings
   * exclude tombstoned docs before `df(t)` is counted, and `N`/`avgdl`
@@ -168,19 +175,23 @@ object Bm25IndexStore {
       spark, path, dump.substring(path.length + 1))
   }
 
-  /** The full posting-row view: the bucket-partitioned main tree plus
-    * any streaming-delta subtree (where `tok_bucket` is a data column —
-    * schema-aligned union). */
-  private def readPostings(spark: SparkSession, path: String): DataFrame = {
-    // SchemaMemo: doc_id's type still comes from the artifact footers,
-    // inferred once per file state (round 22)
-    val main = graft.util.SchemaMemo.parquet(spark,
-      graft.util.ArtifactTree.resolve(spark, path, "postings"))
+  /** The posting-row view a serve reads: the `buckets` directories of
+    * the bucket-partitioned main tree that exist — the rest of the tree
+    * is never listed, so the fixed cost scales with the query, not with
+    * `n_buckets` — plus any streaming-delta subtree (where `tok_bucket`
+    * is a data column — schema-aligned union). doc_id's type still comes
+    * from the artifact footers, inferred once per file state
+    * ([[graft.util.SchemaMemo.parquetPartitions]]). */
+  private def readPostings(spark: SparkSession, path: String, buckets: Seq[Int]): DataFrame =
+    withDeltas(spark, path, graft.util.SchemaMemo.parquetPartitions(spark,
+      graft.util.ArtifactTree.resolve(spark, path, "postings"),
+      buckets.map(b => s"tok_bucket=$b")))
+
+  private def withDeltas(spark: SparkSession, path: String, main: DataFrame): DataFrame =
     graft.util.ArtifactTree.readOptional(spark, path, "postings_deltas") match {
       case None => main
       case Some(d) => main.unionByName(d)
     }
-  }
 
   /** Recompute the one-row stats artifact from the doclens tree (build
     * and append both end here; maintenance-class cost). While takedowns
@@ -225,11 +236,14 @@ object Bm25IndexStore {
   private val StatsSchema = new org.apache.spark.sql.types.StructType()
     .add("n_docs", "long").add("n_tokens", "long")
 
-  def readMeta(spark: SparkSession, path: String): Bm25IndexMeta = {
-    val rows = spark.read.schema(MetaSchema).parquet(s"$path/meta").collect()
-    require(rows.length == 1, s"Bm25IndexStore: expected one meta row at $path, got ${rows.length}")
-    Bm25IndexMeta(rows(0).getAs[String]("model"), rows(0).getAs[Int]("n_buckets"))
-  }
+  /** The `meta` row, read once per file state (only a build writes it). */
+  def readMeta(spark: SparkSession, path: String): Bm25IndexMeta =
+    graft.util.SchemaMemo.once(s"$path/meta", "bm25.meta") {
+      val rows = spark.read.schema(MetaSchema).parquet(s"$path/meta").collect()
+      require(rows.length == 1,
+        s"Bm25IndexStore: expected one meta row at $path, got ${rows.length}")
+      Bm25IndexMeta(rows(0).getAs[String]("model"), rows(0).getAs[Int]("n_buckets"))
+    }
 
   def readDoclens(spark: SparkSession, path: String): DataFrame =
     graft.util.SchemaMemo.parquet(spark,
@@ -322,7 +336,8 @@ object Bm25IndexStore {
       .map(_.select(col("doc_id")))
 
   /** Corpus constants `(N, avgdl)` for serving: the tombstone-free path
-    * reads the one-row stats artifact; pending takedowns read the
+    * reads the one-row stats artifact, once per file state (only builds,
+    * appends and compactions rewrite it); pending takedowns read the
     * one-row stats_net cache maintained by [[deleteFromBm25Index]],
     * accepted only when its tombstone-count stamp matches the live set
     * (so a crashed delete/append can't serve stale constants) — the
@@ -331,21 +346,23 @@ object Bm25IndexStore {
     * serves so their constants are bitwise the same values. */
   private def corpusConstants(
       spark: SparkSession, path: String, tomb: Option[DataFrame]): (Long, Double) = {
-    val statsRow = tomb match {
+    def counts(r: org.apache.spark.sql.Row): (Long, Long) =
+      (r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))
+    val (nDocs, nTokens) = tomb match {
       case None =>
-        spark.read.schema(StatsSchema).parquet(s"$path/stats").head()
+        graft.util.SchemaMemo.once(s"$path/stats", "bm25.stats")(
+          counts(spark.read.schema(StatsSchema).parquet(s"$path/stats").head()))
       case Some(t) =>
         val nTomb = t.distinct().count()
-        graft.util.ArtifactTree.readOptional(spark, path, "stats_net")
+        counts(graft.util.ArtifactTree.readOptional(spark, path, "stats_net")
           .map(_.head())
           .filter(_.getAs[Long]("n_tombstones") == nTomb)
           .getOrElse(
             readDoclens(spark, path).join(broadcast(t), Seq("doc_id"), "left_anti")
               .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("n_tokens"))
-              .head())
+              .head()))
     }
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    val avgdl = if (nDocs == 0L) 0.0 else statsRow.getAs[Long]("n_tokens").toDouble / nDocs
+    val avgdl = if (nDocs == 0L) 0.0 else nTokens.toDouble / nDocs
     (nDocs, avgdl)
   }
 
@@ -379,10 +396,10 @@ object Bm25IndexStore {
   }
 
   /** Serve one BM25 query from the persisted index. Same parameters and
-    * same score/tie/round contract as [[Bm25.search]]; reads ≤ |terms|
-    * posting buckets (static partition pruning) + the one-row stats
-    * artifact (or doclens net of tombstones while takedowns are
-    * pending).
+    * same score/tie/round contract as [[Bm25.search]]; lists and reads
+    * ≤ |terms| posting buckets (static partition pruning) + the
+    * memoized one-row stats artifact (or the validated stats_net cache
+    * while takedowns are pending).
     *
     * `pruneDf` (round 18): the per-call arm of the batched serve's
     * exact MaxScore pruning — identical contract and proof (see
@@ -404,7 +421,7 @@ object Bm25IndexStore {
     val tomb = tombstones(spark, path)
 
     val buckets = terms.map(bucketOf(_, m.nBuckets)).distinct
-    val hit0 = readPostings(spark, path)
+    val hit0 = readPostings(spark, path, buckets)
       .filter(col("tok_bucket").isin(buckets.map(Integer.valueOf): _*) &&
         col("token").isin(terms: _*))
     // exclusion rides an anti-join AFTER the pruned scan (a filter
@@ -611,21 +628,21 @@ object Bm25IndexStore {
     // no matter how large the batch is — a bounded driver action
     val buckets = qterms
       .select(bucketCol(col("token"), m.nBuckets).as("b")).distinct()
-      .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
+      .collect().map(_.getInt(0)).toSeq
     // zero-rows shell with the caller's query-id type AND the index's
-    // doc-id type (taken from the postings artifact, like the live
-    // path — a Long literal would hand non-Long-id indexes a different
-    // degenerate-batch schema than live batches), for the no-terms /
-    // no-hits degenerate batches
+    // doc-id type (the postings artifact's memoized schema — no bucket
+    // is read — like the live path: a Long literal would hand
+    // non-Long-id indexes a different degenerate-batch schema than live
+    // batches), for the no-terms / no-hits degenerate batches
     def emptyResult: DataFrame =
       qterms.select("query_id").limit(0)
-        .crossJoin(readPostings(spark, path).select("doc_id").limit(0))
+        .crossJoin(readPostings(spark, path, Nil).select("doc_id").limit(0))
         .select(col("query_id"), col("doc_id"), lit(0.0).as("score"))
     if (buckets.isEmpty) return emptyResult
 
     val termSet = qterms.select("token").distinct()
-    val hit0 = readPostings(spark, path)
-      .filter(col("tok_bucket").isin(buckets: _*))
+    val hit0 = readPostings(spark, path, buckets)
+      .filter(col("tok_bucket").isin(buckets.map(Integer.valueOf): _*))
       .join(broadcast(termSet), Seq("token"), "left_semi")
     val hitsScan = tomb.fold(hit0)(t => hit0.join(broadcast(t), Seq("doc_id"), "left_anti"))
     if (ServeProbe.capturePlans.get)
@@ -741,11 +758,11 @@ object Bm25IndexStore {
         ServeProbe.rebuilds.incrementAndGet()
         val bucketsC = qtermsC
           .select(bucketCol(col("token"), m.nBuckets).as("b")).distinct()
-          .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
+          .collect().map(_.getInt(0)).toSeq
         if (bucketsC.isEmpty) return emptyResult
         val termSetC = qtermsC.select("token").distinct()
-        val hitC0 = readPostings(spark, path)
-          .filter(col("tok_bucket").isin(bucketsC: _*))
+        val hitC0 = readPostings(spark, path, bucketsC)
+          .filter(col("tok_bucket").isin(bucketsC.map(Integer.valueOf): _*))
           .join(broadcast(termSetC), Seq("token"), "left_semi")
         // same one-scan discipline as the common path: the rebuilt df
         // aggregate materializes, every later consumer reads blocks
@@ -1031,7 +1048,9 @@ object Bm25IndexStore {
       // distinct: delete retries may append duplicate tombstone rows
       case Some(t) => t.select(countDistinct(col("doc_id")).as("n_tombstones"))
     }
-    val post = readPostings(spark, path)
+    // the whole tree, really read: every bucket is counted
+    val post = withDeltas(spark, path, graft.util.SchemaMemo.parquet(spark,
+        graft.util.ArtifactTree.resolve(spark, path, "postings")))
       .groupBy("tok_bucket").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum("n"), lit(0L)).as("n_postings"),
         count(lit(1)).as("n_buckets_used"),

@@ -391,6 +391,90 @@ class Bm25IndexStoreSpec extends SparkSpec {
     assert(serve(dir) == rebuilt, "stamp mismatch must fall back to the exact doclens path")
   }
 
+  /** Bm25.search over `corpus`, one query at a time, keyed like the
+    * batched serve's rows. */
+  private def oracle(corpus: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], roundTo: Int = -1) =
+    queries.flatMap { case (qid, terms) =>
+      Bm25.search(corpus, "text", "doc_id", terms, k = 10, roundTo = roundTo)
+        .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+    }.sortBy(t => (t._1, -t._3, t._2))
+
+  private def batchRows(dir: String, queries: Seq[(Long, Seq[String])]) = {
+    import spark.implicits._
+    Bm25IndexStore.serveBm25TopKBatch(queries.toDF("query_id", "terms"), dir, k = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(t => (t._1, -t._3, t._2)).toSeq
+  }
+
+  private def perCallRows(dir: String, queries: Seq[(Long, Seq[String])]) =
+    queries.flatMap { case (qid, terms) =>
+      Bm25IndexStore.serveBm25TopK(spark, dir, terms, k = 10)
+        .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+    }.sortBy(t => (t._1, -t._3, t._2))
+
+  test("terms whose bucket directory does not exist serve exactly (sparse 1024-bucket index)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-sparse-").toString
+    Bm25IndexStore.writeBm25Index(docs, dir, "text", "doc_id", nBuckets = 1024)
+    val tree = new java.io.File(graft.util.ArtifactTree.resolve(spark, dir, "postings"))
+    def exists(t: String) =
+      new java.io.File(tree, s"tok_bucket=${Bm25IndexStore.bucketOf(t, 1024)}").isDirectory
+    assert(Terms.forall(exists), "the corpus terms' buckets exist")
+    val absent = Iterator.from(0).map(i => s"absent$i").filterNot(exists).take(2).toSeq
+    val queries = Seq(1L -> (Terms ++ absent), 2L -> absent, 3L -> Seq(absent.head, "scan"))
+    val expected = oracle(docs, queries)
+    assert(expected.exists(_._1 == 1L) && !expected.exists(_._1 == 2L))
+    assert(perCallRows(dir, queries) == expected)
+    assert(batchRows(dir, queries) == expected)
+    // a batch whose buckets are ALL absent: zero rows, the live schema
+    val none = Bm25IndexStore.serveBm25TopKBatch({
+      import spark.implicits._
+      Seq((7L, absent)).toDF("query_id", "terms")
+    }, dir, k = 10)
+    assert(none.columns.toSeq == Seq("query_id", "doc_id", "score"))
+    assert(none.schema("doc_id").dataType == docs.schema("doc_id").dataType)
+    assert(none.collect().isEmpty && oracle(docs, Seq(7L -> absent)).isEmpty)
+  }
+
+  test("a compacted postings__vN tree with postings_deltas present serves exactly") {
+    val even = docs.filter(col("doc_id") % 2 === 0)
+    val dir = newIndex(even)
+    Bm25IndexStore.compactBm25Index(spark, dir, targetFiles = 2)
+    Bm25IndexStore.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0), dir)
+    assert(graft.util.ArtifactTree.resolve(spark, dir, "postings").matches(".*/postings__v\\d+"))
+    assert(graft.util.ArtifactTree.exists(spark, dir, "postings_deltas"))
+    val queries = Seq(1L -> Terms, 2L -> Seq("scan", "filter"), 3L -> Seq("sort", "zzz_nope"))
+    val expected = oracle(docs, queries)
+    assert(perCallRows(dir, queries) == expected)
+    assert(batchRows(dir, queries) == expected)
+  }
+
+  test("pending tombstones serve exactly Bm25.search over the live documents") {
+    val dir = newIndex(docs)
+    Bm25IndexStore.deleteFromBm25Index(docs.filter(col("doc_id") % 3 === 0).select("doc_id"), dir)
+    val queries = Seq(1L -> Terms, 2L -> Seq("scan", "filter"))
+    val expected = oracle(docs.filter(col("doc_id") % 3 =!= 0), queries)
+    assert(perCallRows(dir, queries) == expected)
+    assert(batchRows(dir, queries) == expected)
+  }
+
+  test("an append or a compaction after a memoized serve moves N and avgdl in the next serve") {
+    val dir = newIndex(docs.filter(col("doc_id") % 2 === 0))
+    assert(serve(dir) == serve(newIndex(docs.filter(col("doc_id") % 2 === 0))))
+    val q = Seq(1L -> Terms)
+    // the memoized stats row must not survive the append's rewrite
+    Bm25IndexStore.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0), dir)
+    assert(perCallRows(dir, q) == oracle(docs, q))
+    // nor the compaction's: tombstones fold away, stats return to the
+    // memoized one-row path with the smaller N
+    val kept = docs.filter(col("doc_id") % 5 =!= 0)
+    Bm25IndexStore.deleteFromBm25Index(docs.filter(col("doc_id") % 5 === 0).select("doc_id"), dir)
+    Bm25IndexStore.compactBm25Index(spark, dir, targetFiles = 2)
+    assert(perCallRows(dir, q) == oracle(kept, q))
+    assert(batchRows(dir, q) == oracle(kept, q))
+    assert(serve(dir) == serve(newIndex(kept)), "served == rebuild after the compaction")
+  }
+
   test("bucket routing: driver-side bucketOf matches the engine's column expression") {
     import spark.implicits._
     val toks = Seq("spark", "join", "window", "the", "zebra").toDF("token")
