@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * band hits both arms equally; reports per-arm medians. The toggle is
   * REQUIRED — a default property would be one no code reads, and the
   * run would compare two identical arms. Usage:
-  *   AB_PROP=graft.bm25.scanOnce AB_QUERIES=q_a,q_b AB_PASSES=6 \
-  *     sbt "runMain graft.AB"
+  *   AB_PROP=graft.stream.stateParts AB_VAL0=4 AB_VAL1=8 \
+  *     AB_QUERIES=q_stream_stream_join AB_PASSES=8 sbt "runMain graft.AB"
   */
 object AB {
   val Usage: String =

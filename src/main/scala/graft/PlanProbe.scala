@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
   * static counts and, after running the query, the counts from the
   * adaptive FINAL plan section only (AdaptiveSparkPlan.toString renders
   * both final and initial sections — counting the whole string double-
-  * counts every node). */
+  * counts every node). `--dump` also prints the last pass's full
+  * post-execution plan. */
 object PlanProbe {
   private def finalSection(plan: String): String = {
     val i = plan.indexOf("== Final Plan ==")
@@ -31,7 +32,6 @@ object PlanProbe {
       println(s"${tag}_SMJ=" + "SortMergeJoin".r.findAllIn(plan).length)
     }
     report("STATIC", df.queryExecution.executedPlan.toString)
-    if (dump) println(df.queryExecution.executedPlan.toString)
     (1 to passes).foreach { p =>
       val fresh = SparkEntry.queries(name)(spark, dir)
       val t0 = System.nanoTime()
@@ -44,7 +44,11 @@ object PlanProbe {
       // probe runs, not for cross-referencing against bench medians
       fresh.collect()
       println(f"PASS $p SEC=${(System.nanoTime() - t0) / 1e9}%.3f")
-      if (p == passes) report("FINAL", finalSection(fresh.queryExecution.executedPlan.toString))
+      if (p == passes) {
+        val plan = fresh.queryExecution.executedPlan.toString
+        report("FINAL", finalSection(plan))
+        if (dump) println(plan)
+      }
     }
     spark.stop()
   }

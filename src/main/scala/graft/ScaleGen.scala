@@ -56,7 +56,7 @@ object ScaleGen {
   }
 
   private def writeSingleFile(df: DataFrame, outFile: java.nio.file.Path): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scalegen-").toString
+    val tmp = graft.util.Scratch.dir("scalegen").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
     val part =

@@ -92,7 +92,7 @@ object ScaleProbe {
     val dedupIdxDir: String =
       if (!mode.startsWith("dedupidx_probe")) null
       else {
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-didx-").toString
+        val d = graft.util.Scratch.dir("scale-didx").toString
         val corpus = spark.read.parquet(s"$dir/documents.parquet")
         graft.dedup.DedupIndexStore.writeDedupIndex(
           corpus, d, "text", "doc_id",
@@ -111,7 +111,7 @@ object ScaleProbe {
       if (mode != "bm25idx_serve" && mode != "bm25idx_buckets" &&
           !mode.startsWith("bm25idx_serve_batch:")) null
       else {
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-bm25-").toString
+        val d = graft.util.Scratch.dir("scale-bm25").toString
         graft.similarity.Bm25IndexStore.writeBm25Index(
           spark.read.parquet(s"$dir/documents.parquet"), d, "text", "doc_id", nBuckets = 64)
         d
@@ -145,7 +145,7 @@ object ScaleProbe {
       if (!mode.startsWith("bm25zipf")) null
       else {
         val n = mode.split(":")(1).toLong
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-zipf-").toString
+        val d = graft.util.Scratch.dir("scale-zipf").toString
         graft.similarity.Bm25IndexStore.writeBm25Index(
           zipfDocs(n), d, "text", "doc_id", nBuckets = 64)
         val post = spark.read.parquet(
@@ -166,7 +166,7 @@ object ScaleProbe {
     val ivfIdxDir: String =
       if (!mode.startsWith("ivfidx_serve_batch:")) null
       else {
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-ivfsrv-").toString
+        val d = graft.util.Scratch.dir("scale-ivfsrv").toString
         graft.similarity.IndexStore.writeIvfPqIndex(
           spark.read.parquet(s"$dir/embeddings.parquet"), d)
         d
@@ -191,10 +191,10 @@ object ScaleProbe {
           if (mode.startsWith("hybrid_zipf"))
             zipfDocs(mode.split(":")(1).toLong)
           else spark.read.parquet(s"$dir/documents.parquet")
-        val bd = java.nio.file.Files.createTempDirectory("graft-scale-hybm25-").toString
+        val bd = graft.util.Scratch.dir("scale-hybm25").toString
         graft.similarity.Bm25IndexStore.writeBm25Index(
           docs, bd, "text", "doc_id", nBuckets = 64)
-        val ad = java.nio.file.Files.createTempDirectory("graft-scale-hyann-").toString
+        val ad = graft.util.Scratch.dir("scale-hyann").toString
         // eager checkpoint: the cell-count derivation below COUNTS this
         // frame and writeIvfPqIndex re-reads it several times (centroid
         // sample, codebook sample, encode) — without the checkpoint the
@@ -224,7 +224,7 @@ object ScaleProbe {
     var overrideSec: Option[Double] = None
     def run(): Long = mode match {
       case "bm25idx_build" =>
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-bm25-b-").toString
+        val d = graft.util.Scratch.dir("scale-bm25-b").toString
         graft.similarity.Bm25IndexStore.writeBm25Index(
           spark.read.parquet(s"$dir/documents.parquet"), d, "text", "doc_id", nBuckets = 64)
         0L
@@ -358,7 +358,7 @@ object ScaleProbe {
           s""""top_df":$top}""")
         d.getAs[Long]("buckets")
       case "dedupidx_compact" =>
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-didx-c-").toString
+        val d = graft.util.Scratch.dir("scale-didx-c").toString
         val corpus = spark.read.parquet(s"$dir/documents.parquet")
         graft.dedup.DedupIndexStore.writeDedupIndex(
           corpus, d, "text", "doc_id",
@@ -370,7 +370,7 @@ object ScaleProbe {
         overrideSec = Some((System.nanoTime() - t0) / 1e9)
         0L
       case "ivfidx_compact" =>
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-ivfidx-c-").toString
+        val d = graft.util.Scratch.dir("scale-ivfidx-c").toString
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         graft.similarity.IndexStore.writeIvfPqIndex(emb, d)
         graft.similarity.IndexStore.deleteFromIndex(
@@ -380,7 +380,7 @@ object ScaleProbe {
         overrideSec = Some((System.nanoTime() - t0) / 1e9)
         0L
       case "dedupidx_build" =>
-        val d = java.nio.file.Files.createTempDirectory("graft-scale-didx-b-").toString
+        val d = graft.util.Scratch.dir("scale-didx-b").toString
         graft.dedup.DedupIndexStore.writeDedupIndex(
           spark.read.parquet(s"$dir/documents.parquet"), d, "text", "doc_id",
           numHashes = 32, shingleSize = 3, bands = 32, seed = 42L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.{Bpe, Concordance, TextAnalysis, TextFunctions, Tokenize, TokenFrequencies, TokenizerModels, WordPieceTokenizer}
+import graft.util.Scratch
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -93,22 +94,15 @@ object SparkEntry {
   private def StreamStateParts: Int =
     Integer.getInteger("graft.stream.stateParts", 4).intValue()
 
-  /** Offline WordPiece fixture: the in-repo `vocab.txt` covers the corpus
-    * vocabulary with 25 whole words + 6 two-piece decompositions, so the
-    * greedy longest-match output is hand-derivable (and SQL-recomputable
-    * for the oracle). Registered once, lazily, under a `local:` id —
-    * exercising the registry's non-native path end-to-end. */
   /** Scratch cache root for the cached-tokenize query — one per JVM so a
     * bench's warmup pass populates what its timed pass reads. */
-  private lazy val tokCacheDir: String =
-    java.nio.file.Files.createTempDirectory("graft-tokcache-").toString
+  private lazy val tokCacheDir: String = Scratch.dir("tokcache").toString
 
   /** File streams list a directory; the testdata ships single parquet
     * files. Stage a copy once per (JVM, source file) — repeated bench
     * passes reuse it. The read-only source is never touched. */
-  private val stageRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedDir(src: String): String =
-    stageRoots.computeIfAbsent(src, { s =>
+    Scratch.once("stream-stage", src) { d =>
       // PER-QUERY SINGLE-FILE INVARIANT: the stream oracles that use THIS
       // staging (q_stream_stream_join above all) equal their batch SQL
       // only because AvailableNow over a one-file directory runs exactly
@@ -118,13 +112,12 @@ object SparkEntry {
       // invariant is a per-query contract, not a global one. If the
       // testdata ever becomes a multi-file parquet directory, fail loudly
       // here instead of surfacing as a nondeterministic oracle mismatch.
-      val p = java.nio.file.Paths.get(s)
+      val p = java.nio.file.Paths.get(src)
       require(java.nio.file.Files.isRegularFile(p),
-        s"stagedDir expects a single parquet FILE (one micro-batch posture); got $s")
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-stage-")
-      java.nio.file.Files.copy(p, d.resolve(p.getFileName))
-      d.toString
-    })
+        s"stagedDir expects a single parquet FILE (one micro-batch posture); got $src")
+      java.nio.file.Files.copy(p, java.nio.file.Paths.get(d, p.getFileName.toString))
+      d
+    }
 
   /** Multi-batch staging: the source table split into THREE single-file
     * parquets by `event_id % 10` (1–7 → batch-0, 8–9 → batch-1,
@@ -135,21 +128,18 @@ object SparkEntry {
     * each batch's watermark and the exact late-row drops — the
     * multi-batch posture [[stagedDir]]'s single-file invariant exists to
     * avoid, modeled instead of avoided. */
-  private val multiStageRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def stagedMultiDirForTest(s: SparkSession, src: String): String =
-    stagedMultiDir(s, src)
-  private def stagedMultiDir(s: SparkSession, src: String): String =
-    multiStageRoots.computeIfAbsent(src, { _ =>
+  private[graft] def stagedMultiDir(s: SparkSession, src: String): String =
+    Scratch.once("stream-stage3", src) { d =>
       import scala.jdk.CollectionConverters._
       val base = s.read.parquet(src)
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-stage3-")
+      val batches = java.nio.file.Paths.get(sub(d, "batches"))
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stage3-part-")
-        df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
+        val tmp = s"$d/part-$name"
+        df.repartition(1).write.mode("overwrite").parquet(tmp)
+        val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).iterator().asScala
           .find(_.getFileName.toString.endsWith(".parquet"))
           .getOrElse(sys.error(s"no parquet part written for $name"))
-        val dst = d.resolve(name)
+        val dst = batches.resolve(name)
         java.nio.file.Files.move(part, dst)
         require(dst.toFile.setLastModified(mtime), s"cannot set mtime on $dst")
       }
@@ -158,9 +148,18 @@ object SparkEntry {
       writeOne(base.filter(m =!= 0 && m < 8), "batch-0.parquet", t0)
       writeOne(base.filter(m >= 8), "batch-1.parquet", t0 + 60000L)
       writeOne(base.filter(m === 0), "batch-2.parquet", t0 + 120000L)
-      d.toString
-    })
+      batches.toString
+    }
 
+  /** An empty directory `name` inside fixture directory `d`. */
+  private def sub(d: String, name: String): String =
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, name)).toString
+
+  /** Offline WordPiece fixture: the in-repo `vocab.txt` covers the corpus
+    * vocabulary with 25 whole words + 6 two-piece decompositions, so the
+    * greedy longest-match output is hand-derivable (and SQL-recomputable
+    * for the oracle). Registered once, lazily, under a `local:` id —
+    * exercising the registry's non-native path end-to-end. */
   val WordPieceModelId = "local:wordpiece-fixture"
 
   // Shared by the q_seq_pack closure and its oracle SQL (constants hoisted
@@ -284,27 +283,23 @@ object SparkEntry {
   /** One persisted PQ index per (JVM, data dir) — the BUILD job of the
     * persist-and-serve contract, run lazily the first time a serving
     * query needs it (a bench's warmup pass builds, timed passes serve). */
-  private val pqIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqIndexDirFor(s: SparkSession, dir: String): String =
-    pqIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-pq-index-").toString
+    Scratch.once("pq-index", dir) { d =>
       graft.similarity.IndexStore.writePqIndex(
         tbl(s, dir, "embeddings"), d, "vec_id", "embedding",
         PqM, PqCent, IvfSeed, IvfSampleSize, pqCodebooksFor(s, dir))
       d
-    })
+    }
 
   /** The corpus written hive-partitioned by `lang`, once per (JVM, dir)
     * — the layout partition pruning needs. */
-  private val partitionedDocsRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedDocsDirFor(s: SparkSession, dir: String): String =
-    partitionedDocsRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-part-docs-").toString + "/docs"
+    Scratch.once("part-docs", dir) { d =>
       tbl(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-        .write.mode("overwrite").partitionBy("lang").parquet(d)
-      d
-    })
+        .write.mode("overwrite").partitionBy("lang").parquet(s"$d/docs")
+      s"$d/docs"
+    }
 
   /** Orders + lineitem as EXTERNAL tables bucketed by the join key (8
     * buckets, sorted within buckets), once per (JVM, dir): both sides
@@ -325,7 +320,7 @@ object SparkEntry {
       if (prev != null && s.catalog.tableExists(prev._1) &&
           s.catalog.tableExists(prev._2)) prev
       else {
-        val d = java.nio.file.Files.createTempDirectory("graft-bucketed-").toString
+        val d = Scratch.dir("bucketed").toString
         tbl(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .write.mode("overwrite")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -344,10 +339,8 @@ object SparkEntry {
     * index, never retrained). Same final code table as the one-shot
     * build — which is the whole point — so the serving query shares the
     * exact oracle. */
-  private val pqAppendIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqAppendedIndexDirFor(s: SparkSession, dir: String): String =
-    pqAppendIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-pq-index-append-").toString
+    Scratch.once("pq-index-append", dir) { d =>
       val emb = tbl(s, dir, "embeddings")
       graft.similarity.IndexStore.writePqIndex(
         emb.filter(col("vec_id") % 2 === 0), d, "vec_id", "embedding",
@@ -355,22 +348,20 @@ object SparkEntry {
       graft.similarity.IndexStore.appendToPqIndex(
         emb.filter(col("vec_id") % 2 =!= 0), d)
       d
-    })
+    }
 
   /** One persisted MinHash-LSH dedup index per (JVM, dir) over the
     * doc_id%3≠0 two-thirds of the corpus — the incremental-curation
     * BUILD job; probe queries near-dup-check the held-out third against
     * it (bench warmup builds, timed passes probe). Config matches
     * q_minhash_pairs so the oracle reuses the signature CTEs. */
-  private val dedupIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupIndexDirFor(s: SparkSession, dir: String): String =
-    dedupIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-").toString
+    Scratch.once("dedup-index", dir) { d =>
       graft.dedup.DedupIndexStore.writeDedupIndex(
         tbl(s, dir, "documents").filter(col("doc_id") % 3 =!= 0), d,
         "text", "doc_id", numHashes = 32, shingleSize = 3, bands = 32, seed = 42L)
       d
-    })
+    }
 
   /** The daily-curation pipeline composed over the FULL persisted
     * triple — the production loop a training-data platform runs every
@@ -402,8 +393,6 @@ object SparkEntry {
   private final case class DailyPipeline(
       dedupDir: String, bm25Dir: String, annDir: String,
       nDelivery: Long, nFresh: Long, nClean: Long, nSurvivors: Long)
-  private val dailyPipelineRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, DailyPipeline]()
 
   val DailyAnnCells = 4
 
@@ -445,33 +434,27 @@ object SparkEntry {
         embedDocsFixture(tbl(s, dir, "documents")), docAnnCentroidsFor(s, dir),
         "vec_id", "embedding", 2, 8, IvfSeed, IvfSampleSize)
     }
-  private val docAnnIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docAnnIndexDirFor(s: SparkSession, dir: String): String =
-    docAnnIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-docann-index-").toString
+    Scratch.once("docann-index", dir) { d =>
       graft.similarity.IndexStore.writeIvfPqIndex(
         embedDocsFixture(tbl(s, dir, "documents")), d,
         nCells = DocAnnCells, m = 2, kCent = 8, seed = IvfSeed,
         coarseCentroids = docAnnCentroidsFor(s, dir),
         residCodebooks = docAnnResidFor(s, dir))
       d
-    })
+    }
 
   /** The document IVFADC store with the SAME takedown as the deleted
     * BM25 index (doc_id%9==4): a copy of the base artifacts with the
     * ids tombstoned — the ANN half of the hybrid-under-takedown
     * fixture (a takedown hits both serving tiers of the hybrid stack
     * at once in production). */
-  private val docAnnDeletedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docAnnDeletedIndexDirFor(s: SparkSession, dir: String): String =
-    docAnnDeletedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-docann-index-del-").toString
-      copyTree(docAnnIndexDirFor(s, dir), d)
+    variantOf("docann-index-del", dir, docAnnIndexDirFor(s, dir)) { d =>
       graft.similarity.IndexStore.deleteFromIndex(
         tbl(s, dir, "documents").filter(col("doc_id") % 9 === 4)
           .select(col("doc_id").as("vec_id")), d)
-      d
-    })
+    }
 
   /** The hybrid QUERY LOG drained as a stream: the q_hybrid_served_batch
     * batch split across two files → two micro-batches, each served via
@@ -481,41 +464,23 @@ object SparkEntry {
     * streamed union shares the one-shot batch oracle — per-query
     * results are batch-split-invariant by the per-call parity
     * contract. */
-  private val hybridServeStreamRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def hybridStreamServeDirFor(s: SparkSession, dir: String): String =
-    hybridServeStreamRoots.computeIfAbsent(dir, { _ =>
+    Scratch.once("hyb-serve-stream", dir) { d =>
       import s.implicits._
       embedFixtureRegistered
       val bm25 = bm25IndexDirFor(s, dir)
       val ann = docAnnIndexDirFor(s, dir)
-      val drop = java.nio.file.Files.createTempDirectory("graft-hyb-qdrop-").toString
-      val slice0 = Seq(
-        (1L, Seq("spark", "join", "window"), "spark join window"))
-        .toDF("query_id", "terms", "text")
-      slice0.coalesce(1).write.mode("overwrite").parquet(s"$drop/slice0")
-      Seq(
-        (2L, Seq("scan", "filter"), "scan filter pushdown"),
-        (3L, Seq("sort", "merge", "hash"), "hash merge sort"))
-        .toDF("query_id", "terms", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice1")
-      val out = java.nio.file.Files.createTempDirectory("graft-hyb-qout-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-hyb-qckpt-").toString
-      val q = s.readStream.schema(slice0.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$drop/*")
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          graft.similarity.HybridSearch
-            .rrfServedBatch(batch, bm25, ann, EmbedFixtureModelId,
-              k = 20, poolK = 20, nProbe = 3)
-            .write.mode("overwrite").parquet(s"$out/batch-$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      out
-    })
+      serveStream(s, d, Seq(
+        Seq((1L, Seq("spark", "join", "window"), "spark join window"))
+          .toDF("query_id", "terms", "text"),
+        Seq(
+          (2L, Seq("scan", "filter"), "scan filter pushdown"),
+          (3L, Seq("sort", "merge", "hash"), "hash merge sort"))
+          .toDF("query_id", "terms", "text"))) { batch =>
+        graft.similarity.HybridSearch.rrfServedBatch(batch, bm25, ann, EmbedFixtureModelId,
+          k = 20, poolK = 20, nProbe = 3)
+      }
+    }
 
   /** The document-REPLACE lifecycle — the stores' documented contract
     * ("replacing a document is delete → compact → append") exercised
@@ -533,45 +498,33 @@ object SparkEntry {
         concat(coalesce(col("text"), lit("")), lit(" refreshed edition")))
         .otherwise(col("text")))
 
-  private val bm25ReplacedRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25ReplacedIndexDirFor(s: SparkSession, dir: String): String =
-    bm25ReplacedRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-replace-").toString
-      copyTree(bm25IndexDirFor(s, dir), d)
+    variantOf("bm25-replace", dir, bm25IndexDirFor(s, dir)) { d =>
       val repl = replacedDocs(tbl(s, dir, "documents")).filter(col("doc_id") % 17 === 3)
       graft.similarity.Bm25IndexStore.deleteFromBm25Index(repl.select("doc_id"), d)
       graft.similarity.Bm25IndexStore.compactBm25Index(s, d)
       graft.similarity.Bm25IndexStore
         .appendToBm25Index(repl, d, "text", "doc_id", batchId = "replace")
-      d
-    })
+    }
 
-  private val dedupReplacedRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupReplacedIndexDirFor(s: SparkSession, dir: String): String =
-    dedupReplacedRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-replace-").toString
-      copyTree(dedupIndexDirFor(s, dir), d)
+    variantOf("dedup-replace", dir, dedupIndexDirFor(s, dir)) { d =>
       val repl = replacedDocs(tbl(s, dir, "documents"))
         .filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 17 === 3)
       graft.dedup.DedupIndexStore.deleteFromDedupIndex(repl.select("doc_id"), d)
       graft.dedup.DedupIndexStore.compactDedupIndex(s, d)
       graft.dedup.DedupIndexStore
         .appendToDedupIndex(repl, d, "text", "doc_id", batchId = "replace")
-      d
-    })
+    }
 
-  private val docAnnReplacedRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docAnnReplacedIndexDirFor(s: SparkSession, dir: String): String =
-    docAnnReplacedRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-docann-replace-").toString
-      copyTree(docAnnIndexDirFor(s, dir), d)
+    variantOf("docann-replace", dir, docAnnIndexDirFor(s, dir)) { d =>
       val repl = embedDocsFixture(
         replacedDocs(tbl(s, dir, "documents")).filter(col("doc_id") % 17 === 3))
       graft.similarity.IndexStore.deleteFromIndex(repl.select("vec_id"), d)
       graft.similarity.IndexStore.compactIvfIndex(s, d)
       graft.similarity.IndexStore.appendToIvfPqIndex(repl, d)
-      d
-    })
+    }
 
   /** The three store-stat rows both daily-pipeline queries read back:
     * dedup (docs, band buckets), BM25 (docs, posting rows), ANN (codes,
@@ -591,50 +544,63 @@ object SparkEntry {
     dstats.unionByName(bstats).unionByName(astats)
   }
 
+  /** One day of the daily loop: today's delivery (doc_id%3=0) diffed
+    * against `yesterday(delivery)`, decontaminated and probed; the
+    * survivors staged once, then `land(atRest, survivors)` appends them
+    * to the three stores and returns their directories. */
+  private def dailyRun(s: SparkSession, dir: String, d: String, yesterday: DataFrame => DataFrame)(
+      land: (DataFrame, DataFrame) => (String, String, String)): DailyPipeline = {
+    val docs = tbl(s, dir, "documents")
+    val atRest = docs.filter(col("doc_id") % 3 =!= 0)
+    val delivery = docs.filter(col("doc_id") % 3 === 0)
+    // 1. diff gates everything downstream to the genuinely-new docs
+    val fresh = graft.dedup.Dedup.snapshotDiff(yesterday(delivery), delivery)
+      .filter(col("status").isin("added", "changed"))
+      .select("doc_id")
+    val freshDocs = delivery.join(fresh, Seq("doc_id"))
+    // 2. decontaminate against the eval split (3-gram overlap)
+    val evalSplit = atRest.filter(col("doc_id") % 11 === 0)
+    val contaminated = graft.dedup.Decontaminate
+      .overlap(evalSplit, freshDocs, "text", "doc_id", n = 3)
+      .select("doc_id")
+    val clean = freshDocs.join(contaminated, Seq("doc_id"), "left_anti")
+    // 3. near-dup probe against the at-rest dedup store (artifacts only)
+    val matched = graft.dedup.DedupIndexStore
+      .probeDedupIndex(clean, dedupIndexDirFor(s, dir), "text", "doc_id",
+        threshold = 0.125)
+      .select(col("id_new").as("doc_id")).distinct()
+    val stage = sub(d, "stage")
+    clean.join(matched, Seq("doc_id"), "left_anti")
+      .write.mode("overwrite").parquet(s"$stage/survivors")
+    // explicit schema: an empty survivor stage may land with no part
+    // files, and schema inference over an empty dir throws
+    val surv = s.read.schema(delivery.schema).parquet(s"$stage/survivors")
+    // 4. survivors land in all three stores (delta-sized appends)
+    val (dd, bd, ad) = land(atRest, surv)
+    DailyPipeline(dd, bd, ad,
+      delivery.count(), freshDocs.count(), clean.count(), surv.count())
+  }
+
   private def dailyPipelineFor(s: SparkSession, dir: String): DailyPipeline =
-    dailyPipelineRoots.computeIfAbsent(dir, { _ =>
-      val docs = tbl(s, dir, "documents")
-      val atRest = docs.filter(col("doc_id") % 3 =!= 0)
-      val delivery = docs.filter(col("doc_id") % 3 === 0)
-      val yesterday = delivery.filter(col("doc_id") % 5 =!= 2)
-      // 1. diff gates everything downstream to the genuinely-new docs
-      val fresh = graft.dedup.Dedup.snapshotDiff(yesterday, delivery)
-        .filter(col("status").isin("added", "changed"))
-        .select("doc_id")
-      val freshDocs = delivery.join(fresh, Seq("doc_id"))
-      // 2. decontaminate against the eval split (3-gram overlap)
-      val evalSplit = atRest.filter(col("doc_id") % 11 === 0)
-      val contaminated = graft.dedup.Decontaminate
-        .overlap(evalSplit, freshDocs, "text", "doc_id", n = 3)
-        .select("doc_id")
-      val clean = freshDocs.join(contaminated, Seq("doc_id"), "left_anti")
-      // 3. near-dup probe against the at-rest dedup store (artifacts only)
-      val matched = graft.dedup.DedupIndexStore
-        .probeDedupIndex(clean, dedupIndexDirFor(s, dir), "text", "doc_id",
-          threshold = 0.125)
-        .select(col("id_new").as("doc_id")).distinct()
-      val stage = java.nio.file.Files.createTempDirectory("graft-daily-stage-").toString
-      clean.join(matched, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/survivors")
-      val surv = s.read.parquet(s"$stage/survivors")
-      // 4. survivors land in all three stores (delta-sized appends)
-      val dd = java.nio.file.Files.createTempDirectory("graft-daily-dedup-").toString
-      copyTree(dedupIndexDirFor(s, dir), dd)
-      graft.dedup.DedupIndexStore
-        .appendToDedupIndex(surv, dd, "text", "doc_id", batchId = "daily")
-      val bd = java.nio.file.Files.createTempDirectory("graft-daily-bm25-").toString
-      graft.similarity.Bm25IndexStore
-        .writeBm25Index(atRest, bd, "text", "doc_id", nBuckets = 16)
-      graft.similarity.Bm25IndexStore
-        .appendToBm25Index(surv, bd, "text", "doc_id", batchId = "daily")
-      val ad = java.nio.file.Files.createTempDirectory("graft-daily-ann-").toString
-      graft.similarity.IndexStore.writeIvfPqIndex(
-        embedDocsFixture(atRest), ad, nCells = DailyAnnCells, m = 2, kCent = 8,
-        seed = IvfSeed, coarseCentroids = dailyAnnCentroidsFor(s, dir))
-      graft.similarity.IndexStore.appendToIvfPqIndex(embedDocsFixture(surv), ad)
-      DailyPipeline(dd, bd, ad,
-        delivery.count(), freshDocs.count(), clean.count(), surv.count())
-    })
+    Scratch.once("daily", dir) { d =>
+      dailyRun(s, dir, d, _.filter(col("doc_id") % 5 =!= 2)) { (atRest, surv) =>
+        val dd = sub(d, "dedup")
+        copyTree(dedupIndexDirFor(s, dir), dd)
+        graft.dedup.DedupIndexStore
+          .appendToDedupIndex(surv, dd, "text", "doc_id", batchId = "daily")
+        val bd = sub(d, "bm25")
+        graft.similarity.Bm25IndexStore
+          .writeBm25Index(atRest, bd, "text", "doc_id", nBuckets = 16)
+        graft.similarity.Bm25IndexStore
+          .appendToBm25Index(surv, bd, "text", "doc_id", batchId = "daily")
+        val ad = sub(d, "ann")
+        graft.similarity.IndexStore.writeIvfPqIndex(
+          embedDocsFixture(atRest), ad, nCells = DailyAnnCells, m = 2, kCent = 8,
+          seed = IvfSeed, coarseCentroids = dailyAnnCentroidsFor(s, dir))
+        graft.similarity.IndexStore.appendToIvfPqIndex(embedDocsFixture(surv), ad)
+        (dd, bd, ad)
+      }
+    }
 
   /** DAY 2 of the daily loop, run FOR REAL against COPIES of the day-1
     * stores: the re-delivered batch goes through the full downstream —
@@ -644,49 +610,25 @@ object SparkEntry {
     * behavior under the oracle (stats must read back bit-for-bit as
     * day 1 left them), not a short-circuit assumption about what an
     * empty append WOULD do. */
-  private val dailyPipelineDay2Roots =
-    new java.util.concurrent.ConcurrentHashMap[String, DailyPipeline]()
   private def dailyPipelineDay2For(s: SparkSession, dir: String): DailyPipeline =
-    dailyPipelineDay2Roots.computeIfAbsent(dir, { _ =>
+    Scratch.once("daily2", dir) { d =>
       val p = dailyPipelineFor(s, dir)
-      val docs = tbl(s, dir, "documents")
-      val atRest = docs.filter(col("doc_id") % 3 =!= 0)
-      val delivery = docs.filter(col("doc_id") % 3 === 0)
       // the same delivery re-arrives: yesterday IS today
-      val fresh = graft.dedup.Dedup.snapshotDiff(delivery, delivery)
-        .filter(col("status").isin("added", "changed"))
-        .select("doc_id")
-      val freshDocs = delivery.join(fresh, Seq("doc_id"))
-      val evalSplit = atRest.filter(col("doc_id") % 11 === 0)
-      val contaminated = graft.dedup.Decontaminate
-        .overlap(evalSplit, freshDocs, "text", "doc_id", n = 3)
-        .select("doc_id")
-      val clean = freshDocs.join(contaminated, Seq("doc_id"), "left_anti")
-      val matched = graft.dedup.DedupIndexStore
-        .probeDedupIndex(clean, dedupIndexDirFor(s, dir), "text", "doc_id",
-          threshold = 0.125)
-        .select(col("id_new").as("doc_id")).distinct()
-      val stage = java.nio.file.Files.createTempDirectory("graft-daily2-stage-").toString
-      clean.join(matched, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/survivors")
-      // explicit schema: the empty survivor stage may land with no
-      // part files, and schema inference over an empty dir throws
-      val surv = s.read.schema(delivery.schema).parquet(s"$stage/survivors")
-      val dd = java.nio.file.Files.createTempDirectory("graft-daily2-dedup-").toString
-      copyTree(p.dedupDir, dd)
-      graft.dedup.DedupIndexStore
-        .appendToDedupIndex(surv, dd, "text", "doc_id", batchId = "daily2")
-      val bd = java.nio.file.Files.createTempDirectory("graft-daily2-bm25-").toString
-      copyTree(p.bm25Dir, bd)
-      graft.similarity.Bm25IndexStore
-        .appendToBm25Index(surv, bd, "text", "doc_id", batchId = "daily2")
-      val ad = java.nio.file.Files.createTempDirectory("graft-daily2-ann-").toString
-      copyTree(p.annDir, ad)
-      graft.similarity.IndexStore.appendToIvfPqIndex(embedDocsFixture(surv), ad)
-      DailyPipeline(dd, bd, ad,
-        delivery.count(), freshDocs.count(), clean.count(),
-        s.read.schema(delivery.schema).parquet(s"$stage/survivors").count())
-    })
+      dailyRun(s, dir, d, identity) { (_, surv) =>
+        val dd = sub(d, "dedup")
+        copyTree(p.dedupDir, dd)
+        graft.dedup.DedupIndexStore
+          .appendToDedupIndex(surv, dd, "text", "doc_id", batchId = "daily2")
+        val bd = sub(d, "bm25")
+        copyTree(p.bm25Dir, bd)
+        graft.similarity.Bm25IndexStore
+          .appendToBm25Index(surv, bd, "text", "doc_id", batchId = "daily2")
+        val ad = sub(d, "ann")
+        copyTree(p.annDir, ad)
+        graft.similarity.IndexStore.appendToIvfPqIndex(embedDocsFixture(surv), ad)
+        (dd, bd, ad)
+      }
+    }
 
   /** Fixture plumbing: clone an index's artifact tree so a lifecycle
     * variant (delete, compact) starts from the SAME base artifacts
@@ -705,13 +647,50 @@ object SparkEntry {
     } finally walk.close()
   }
 
+  /** A lifecycle variant of a fixture index, once per (JVM, dir): the
+    * `base` tree copied into a fresh directory, then `mutate`d there. */
+  private def variantOf(kind: String, dir: String, base: => String)(
+      mutate: String => Unit): String =
+    Scratch.once(kind, dir) { d => copyTree(base, d); mutate(d); d }
+
+  /** Drain `slices` through a file stream, one slice file per
+    * micro-batch: the slices land under `d/drop`, `start(stream, ckpt)`
+    * starts the query over them, and its AvailableNow run is awaited. */
+  private def drainSlices(s: SparkSession, d: String, slices: Seq[DataFrame])(
+      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val drop = sub(d, "drop")
+    for ((slice, i) <- slices.zipWithIndex)
+      slice.coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$i")
+    val q = start(
+      s.readStream.schema(slices.head.schema).option("maxFilesPerTrigger", "1").parquet(s"$drop/*"),
+      sub(d, "ckpt"))
+    try q.awaitTermination()
+    finally q.stop()
+  }
+
+  /** A query log drained as a stream ([[drainSlices]]): each micro-batch
+    * is served by `serve` and lands in `d/out/batch-<id>` with overwrite
+    * semantics, so a replayed micro-batch rewrites its own directory.
+    * Returns `d/out`. */
+  private def serveStream(s: SparkSession, d: String, slices: Seq[DataFrame])(
+      serve: DataFrame => DataFrame): String = {
+    val out = sub(d, "out")
+    drainSlices(s, d, slices) { (stream, ckpt) =>
+      stream.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          serve(batch).write.mode("overwrite").parquet(s"$out/batch-$batchId")
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
+    out
+  }
+
   /** The INCREMENTAL dedup index: built over the %3==1 third, the %3==2
     * third appended under the persisted config — same artifacts as the
     * one-shot build, so the probe query shares its exact oracle. */
-  private val dedupAppendIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupAppendedIndexDirFor(s: SparkSession, dir: String): String =
-    dedupAppendIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-append-").toString
+    Scratch.once("dedup-index-append", dir) { d =>
       val docsTbl = tbl(s, dir, "documents")
       graft.dedup.DedupIndexStore.writeDedupIndex(
         docsTbl.filter(col("doc_id") % 3 === 1), d,
@@ -719,7 +698,7 @@ object SparkEntry {
       graft.dedup.DedupIndexStore.appendToDedupIndex(
         docsTbl.filter(col("doc_id") % 3 === 2), d, "text", "doc_id")
       d
-    })
+    }
 
   /** The STREAMING-INGESTED dedup index: base third built batch, the
     * %3==2 third arriving as a 3-file drop directory consumed by the
@@ -728,41 +707,30 @@ object SparkEntry {
     * equal the one-shot %3≠0 build, so the probe shares its exact
     * oracle — which is precisely the exactly-once claim under the
     * DuckDB gate instead of only the spec. */
-  private val dedupStreamIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupStreamIndexDirFor(s: SparkSession, dir: String): String =
-    dedupStreamIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-stream-").toString
+    Scratch.once("dedup-index-stream", dir) { d =>
+      val idx = sub(d, "index")
       val docsTbl = tbl(s, dir, "documents")
       graft.dedup.DedupIndexStore.writeDedupIndex(
-        docsTbl.filter(col("doc_id") % 3 === 1), d,
+        docsTbl.filter(col("doc_id") % 3 === 1), idx,
         "text", "doc_id", numHashes = 32, shingleSize = 3, bands = 32, seed = 42L)
-      val drop = java.nio.file.Files.createTempDirectory("graft-dedup-drop-").toString
       val delta = docsTbl.filter(col("doc_id") % 3 === 2)
-      for (slice <- 0 until 3)
-        delta.filter(col("doc_id") % 9 === (2 + 3 * slice))
-          .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-dedup-ingest-ckpt-").toString
-      val stream = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$drop/*")
-      val q = graft.dedup.DedupIndexStore.streamAppendToDedupIndex(stream, d, ckpt, "text", "doc_id")
-      try q.awaitTermination()
-      finally q.stop()
-      d
-    })
+      drainSlices(s, d, (0 until 3).map(i => delta.filter(col("doc_id") % 9 === (2 + 3 * i)))) {
+        (stream, ckpt) => graft.dedup.DedupIndexStore
+          .streamAppendToDedupIndex(stream, idx, ckpt, "text", "doc_id")
+      }
+      idx
+    }
 
   /** The takedown index after COMPACTION: the tombstoned rows are
     * physically gone from both artifacts and the tombstones cleared —
     * the probe must see identical pairs to the logical-delete index,
     * but now because the rows don't exist rather than because an
     * anti-join hides them. */
-  private val dedupCompactedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupCompactedIndexDirFor(s: SparkSession, dir: String): String =
-    dedupCompactedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-compact-").toString
-      copyTree(dedupDeletedIndexDirFor(s, dir), d)
+    variantOf("dedup-index-compact", dir, dedupDeletedIndexDirFor(s, dir)) { d =>
       graft.dedup.DedupIndexStore.compactDedupIndex(s, d)
-      d
-    })
+    }
 
   /** The takedown index compacted TWICE under `graceVersions = 2`
     * (round 19): retention is count-based, so the SECOND cycle is what
@@ -773,46 +741,36 @@ object SparkEntry {
     * (shares q_dedup_index_compacted's oracle): retention changes what
     * superseded trees remain on disk, never what the resolved current
     * version serves. */
-  private val dedupGraceIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupGraceIndexDirFor(s: SparkSession, dir: String): String =
-    dedupGraceIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-grace-").toString
-      copyTree(dedupDeletedIndexDirFor(s, dir), d)
+    variantOf("dedup-index-grace", dir, dedupDeletedIndexDirFor(s, dir)) { d =>
       graft.dedup.DedupIndexStore.compactDedupIndex(s, d, graceVersions = 2)
       graft.dedup.DedupIndexStore.compactDedupIndex(s, d, graceVersions = 2)
       // the knob's disk-side observable, asserted at build so the oracle
       // query can't silently degrade into a rerun of the default fixture
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(d, "signatures")),
         "graceVersions=2 failed to retain the version-0 signatures tree across two cycles")
-      d
-    })
+    }
 
   /** The dedup index with a takedown applied: one-shot build over the
     * %3≠0 corpus, then doc_id%5==1 tombstoned out — the delete is
     * logical (tombstones artifact), so probes must exclude those ids
     * with the physical rows still in place. */
-  private val dedupDeletedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupDeletedIndexDirFor(s: SparkSession, dir: String): String =
-    dedupDeletedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-dedup-index-del-").toString
+    variantOf("dedup-index-del", dir, dedupIndexDirFor(s, dir)) { d =>
       val docsTbl = tbl(s, dir, "documents")
-      copyTree(dedupIndexDirFor(s, dir), d)
       graft.dedup.DedupIndexStore.deleteFromDedupIndex(
         docsTbl.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 1).select("doc_id"), d)
-      d
-    })
+    }
 
   /** One persisted BM25 inverted index per (JVM, dir) over the full
     * documents table — the lexical serving tier's fixture (bench
     * warmup builds, timed passes serve). */
-  private val bm25IndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25IndexDirFor(s: SparkSession, dir: String): String =
-    bm25IndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-index-").toString
+    Scratch.once("bm25-index", dir) { d =>
       graft.similarity.Bm25IndexStore.writeBm25Index(
         tbl(s, dir, "documents"), d, "text", "doc_id", nBuckets = 16)
       d
-    })
+    }
 
   /** The STREAMING-INGESTED BM25 index: even half built batch, the odd
     * half arriving as a 3-file drop directory drained by the
@@ -820,27 +778,19 @@ object SparkEntry {
     * artifacts landing in batch-scoped delta dirs). Index contents
     * equal the one-shot full build, so serving shares its exact
     * oracle — the exactly-once claim under the DuckDB gate. */
-  private val bm25StreamIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25StreamIndexDirFor(s: SparkSession, dir: String): String =
-    bm25StreamIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-index-stream-").toString
+    Scratch.once("bm25-index-stream", dir) { d =>
+      val idx = sub(d, "index")
       val docsTbl = tbl(s, dir, "documents")
       graft.similarity.Bm25IndexStore.writeBm25Index(
-        docsTbl.filter(col("doc_id") % 2 === 0), d, "text", "doc_id", nBuckets = 16)
-      val drop = java.nio.file.Files.createTempDirectory("graft-bm25-drop-").toString
+        docsTbl.filter(col("doc_id") % 2 === 0), idx, "text", "doc_id", nBuckets = 16)
       val delta = docsTbl.filter(col("doc_id") % 2 =!= 0)
-      for (slice <- 0 until 3)
-        delta.filter(col("doc_id") % 6 === (1 + 2 * slice))
-          .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-bm25-ingest-ckpt-").toString
-      val stream = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$drop/*")
-      val q = graft.similarity.Bm25IndexStore
-        .streamAppendToBm25Index(stream, d, ckpt, "text", "doc_id")
-      try q.awaitTermination()
-      finally q.stop()
-      d
-    })
+      drainSlices(s, d, (0 until 3).map(i => delta.filter(col("doc_id") % 6 === (1 + 2 * i)))) {
+        (stream, ckpt) => graft.similarity.Bm25IndexStore
+          .streamAppendToBm25Index(stream, idx, ckpt, "text", "doc_id")
+      }
+      idx
+    }
 
   /** STREAMING QUERY SERVING — the other direction of the streaming
     * story: not deltas into the index, but a QUERY LOG arriving as a
@@ -855,106 +805,73 @@ object SparkEntry {
     * results are batch-split-invariant (each query's rows are
     * bitwise the per-call serve's), so the streamed union shares the
     * one-shot batch oracle. */
-  private val bm25ServeStreamRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25StreamServeDirFor(s: SparkSession, dir: String): String =
-    bm25ServeStreamRoots.computeIfAbsent(dir, { _ =>
+    Scratch.once("bm25-serve-stream", dir) { d =>
       import s.implicits._
       val idx = bm25IndexDirFor(s, dir)
-      val drop = java.nio.file.Files.createTempDirectory("graft-bm25-qdrop-").toString
-      val slice0 = Seq(
-        (1L, Seq("spark", "join", "window")),
-        (2L, Seq("scan", "filter"))).toDF("query_id", "terms")
-      slice0.coalesce(1).write.mode("overwrite").parquet(s"$drop/slice0")
-      Seq(
-        (3L, Seq("sort", "merge", "hash", "batch")),
-        (4L, Seq("vector", "zzz_not_a_token", "vector", "stream")))
-        .toDF("query_id", "terms")
-        .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice1")
-      val out = java.nio.file.Files.createTempDirectory("graft-bm25-qout-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-bm25-qckpt-").toString
-      val q = s.readStream.schema(slice0.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$drop/*")
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          graft.similarity.Bm25IndexStore
-            .serveBm25TopKBatch(batch, idx, k = 10, roundTo = 6)
-            .write.mode("overwrite").parquet(s"$out/batch-$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      out
-    })
+      serveStream(s, d, Seq(
+        Seq(
+          (1L, Seq("spark", "join", "window")),
+          (2L, Seq("scan", "filter"))).toDF("query_id", "terms"),
+        Seq(
+          (3L, Seq("sort", "merge", "hash", "batch")),
+          (4L, Seq("vector", "zzz_not_a_token", "vector", "stream")))
+          .toDF("query_id", "terms"))) { batch =>
+        graft.similarity.Bm25IndexStore.serveBm25TopKBatch(batch, idx, k = 10, roundTo = 6)
+      }
+    }
 
   /** The BM25 index with a takedown applied: doc_id%9==4 tombstoned out
     * of a COPY of the base artifacts (a takedown never re-tokenizes). */
-  private val bm25DeletedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25DeletedIndexDirFor(s: SparkSession, dir: String): String =
-    bm25DeletedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-index-del-").toString
-      copyTree(bm25IndexDirFor(s, dir), d)
+    variantOf("bm25-index-del", dir, bm25IndexDirFor(s, dir)) { d =>
       graft.similarity.Bm25IndexStore.deleteFromBm25Index(
         tbl(s, dir, "documents").filter(col("doc_id") % 9 === 4).select("doc_id"), d)
-      d
-    })
+    }
 
   /** The served IVF index with a takedown applied: same trained
     * artifacts as q_knn_ivf_served, vec_id%7==3 tombstoned out. */
-  private val ivfDeletedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfDeletedIndexDirFor(s: SparkSession, dir: String): String =
-    ivfDeletedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-index-del-").toString
+    variantOf("ivf-index-del", dir, ivfIndexDirFor(s, dir)) { d =>
       val emb = tbl(s, dir, "embeddings")
-      copyTree(ivfIndexDirFor(s, dir), d)
       graft.similarity.IndexStore.deleteFromIndex(
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), d)
-      d
-    })
+    }
 
   /** The takedown ANN index after COMPACTION: tombstoned codes
     * physically dropped from the cell-partitioned tree and the
     * tombstones cleared — serving must return pairs identical to the
     * logical-delete index, now because the rows don't exist rather
     * than because the anti-join hides them. */
-  private val ivfCompactedIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfCompactedIndexDirFor(s: SparkSession, dir: String): String =
-    ivfCompactedIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-index-compact-").toString
-      copyTree(ivfDeletedIndexDirFor(s, dir), d)
+    variantOf("ivf-index-compact", dir, ivfDeletedIndexDirFor(s, dir)) { d =>
       graft.similarity.IndexStore.compactIvfIndex(s, d)
-      d
-    })
+    }
 
   /** One persisted IVFADC index per (JVM, dir): the composed layout's
     * persist-and-serve artifact (coarse + residual codebooks + codes
     * PARTITIONED BY CELL), built from the SAME memoized trained
     * artifacts q_knn_ivfpq uses — so serving is bit-identical and
     * shares its oracle. */
-  private val ivfIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfIndexDirFor(s: SparkSession, dir: String): String =
-    ivfIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-index-").toString
+    Scratch.once("ivf-index", dir) { d =>
       graft.similarity.IndexStore.writeIvfPqIndex(
         tbl(s, dir, "embeddings"), d, "vec_id", "embedding",
         IvfCells, PqM, PqCent, IvfSeed, IvfSampleSize,
         ivfCentroidsFor(s, dir), ivfResidCodebooksFor(s, dir))
       d
-    })
+    }
 
   /** One persisted OPQ×IVF index per (JVM, dir): rotation + rotated-
     * space IVF artifacts, from the SAME memoized training q_knn_opq_ivf
     * uses — served results bit-identical, same oracle. */
-  private val opqIvfIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def opqIvfIndexDirFor(s: SparkSession, dir: String): String =
-    opqIvfIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-opqivf-index-").toString
+    Scratch.once("opqivf-index", dir) { d =>
       val (rot, cents, rcbs) = opqIvfFor(s, dir)
       graft.similarity.IndexStore.writeOpqIvfIndex(
         tbl(s, dir, "embeddings"), d, rot, cents, rcbs)
       d
-    })
+    }
 
   /** The STREAMING-ingest variant: same even-half build, but the odd
     * half arrives as a 3-file drop directory drained by the
@@ -963,27 +880,19 @@ object SparkEntry {
     * final code set must equal the one-shot build's, so serving shares
     * q_knn_pq_rerank's exact oracle — the full production delta path,
     * stream edition. */
-  private val pqStreamIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqStreamIndexDirFor(s: SparkSession, dir: String): String =
-    pqStreamIndexRoots.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft-pq-index-stream-").toString
+    Scratch.once("pq-index-stream", dir) { d =>
+      val idx = sub(d, "index")
       val emb = tbl(s, dir, "embeddings")
       graft.similarity.IndexStore.writePqIndex(
-        emb.filter(col("vec_id") % 2 === 0), d, "vec_id", "embedding",
+        emb.filter(col("vec_id") % 2 === 0), idx, "vec_id", "embedding",
         PqM, PqCent, IvfSeed, IvfSampleSize, pqCodebooksFor(s, dir))
-      val drop = java.nio.file.Files.createTempDirectory("graft-pq-drop-").toString
       val odd = emb.filter(col("vec_id") % 2 =!= 0)
-      for (slice <- 0 until 3)
-        odd.filter(col("vec_id") % 6 === (2 * slice + 1))
-          .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-pq-ingest-ckpt-").toString
-      val stream = s.readStream.schema(odd.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$drop/*")
-      val q = graft.similarity.IndexStore.streamAppendToPqIndex(stream, d, ckpt)
-      try q.awaitTermination()
-      finally q.stop()
-      d
-    })
+      drainSlices(s, d, (0 until 3).map(i => odd.filter(col("vec_id") % 6 === (2 * i + 1)))) {
+        (stream, ckpt) => graft.similarity.IndexStore.streamAppendToPqIndex(stream, idx, ckpt)
+      }
+      idx
+    }
   // q_semdedup: the synthetic embeddings are hash-random (max pairwise
   // cosine ~0.5), so the semantic-duplicate threshold sits where the
   // corpus has real pair structure; production corpora use ~0.95+
@@ -1031,7 +940,7 @@ FROM pieces ORDER BY doc_id, start_cp, token"""
   private lazy val hfFixtureJsonPath: String = {
     val in = getClass.getResourceAsStream("/graft/hf_tokenizer_fixture.json")
     require(in != null, "hf_tokenizer_fixture.json missing from resources")
-    val p = java.nio.file.Files.createTempFile("graft-hf-tokenizer-", ".json")
+    val p = Scratch.dir("hf-tokenizer").resolve("tokenizer.json")
     try java.nio.file.Files.copy(in, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     finally in.close()
     p.toString
@@ -1209,10 +1118,8 @@ FROM pieces ORDER BY doc_id, start_cp, token"""
 
   /** Scratch cache roots for the typed-cache queries (one per JVM, the
     * tokCacheDir pattern: the bench warmup populates, timed passes hit). */
-  private lazy val typedTokCacheDir: String =
-    java.nio.file.Files.createTempDirectory("graft-typedtok-").toString
-  private lazy val embedCacheDir: String =
-    java.nio.file.Files.createTempDirectory("graft-embcache-").toString
+  private lazy val typedTokCacheDir: String = Scratch.dir("typedtok").toString
+  private lazy val embedCacheDir: String = Scratch.dir("embcache").toString
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Corpus-comparison keyness (log-likelihood G² et al.) of English vs
@@ -1289,7 +1196,7 @@ ORDER BY doc_id, token""")
     // loss (escaping, nulls, type drift) breaks the hash. A fresh temp
     // dir per invocation — bench measures the real write+read cost.
     "q_sink_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-sink-").toString + "/docs_json"
+      val out = Scratch.dir("sink").toString + "/docs_json"
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       docs.write.mode("overwrite").json(out)
       s.read.schema(docs.schema).json(out)
@@ -1302,7 +1209,7 @@ ORDER BY doc_id, token""")
     // header + quoted strings; text is single-line by corpus shape, so
     // quoting/escaping of the delimiter class is what's under test
     "q_sink_roundtrip_csv" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-sink-").toString + "/docs_csv"
+      val out = Scratch.dir("sink").toString + "/docs_csv"
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       docs.write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(docs.schema).option("header", "true").csv(out)
@@ -1314,7 +1221,7 @@ ORDER BY doc_id, token""")
     // and through ORC — the second columnar container a lakehouse
     // deployment actually swaps in; same oracle against the original
     "q_sink_roundtrip_orc" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-sink-").toString + "/docs_orc"
+      val out = Scratch.dir("sink").toString + "/docs_orc"
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       docs.write.mode("overwrite").orc(out)
       s.read.schema(docs.schema).orc(out)
@@ -3269,7 +3176,7 @@ ORDER BY doc_id, token""")
     // answers the SAME oracle as q_perplexity, pinning saved == fresh
     "q_perplexity_saved" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft-lm-").toString + "/unigram"
+      val path = Scratch.dir("lm").toString + "/unigram"
       graft.text.LanguageModel.fitUnigram(docs, "text").write.mode("overwrite").parquet(path)
       graft.text.LanguageModel
         .scoreUnigram(docs, "text", "doc_id", s.read.parquet(path))

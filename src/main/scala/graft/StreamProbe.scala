@@ -11,7 +11,7 @@ object StreamProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val staged = SparkEntry.stagedMultiDirForTest(spark, s"$dir/events.parquet")
+    val staged = SparkEntry.stagedMultiDir(spark, s"$dir/events.parquet")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val src = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(staged)
     val stream = src.withColumn("ets", SparkEntry.normalizedTs(src, "ts"))

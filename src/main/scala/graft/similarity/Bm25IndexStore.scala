@@ -73,17 +73,6 @@ object Bm25IndexStore {
 
   case class Bm25IndexMeta(model: String, nBuckets: Int)
 
-  /** Round 22 one-scan serve knob: the serves materialize their pruned
-    * postings scan into lazy-checkpoint blocks so every later consumer
-    * reads blocks instead of re-scanning parquet. `-Dgraft.bm25.scanOnce=0`
-    * reverts to per-consumer re-scans — the ops escape hatch for a
-    * deployment whose UNPRUNED hot batches would outgrow executor
-    * storage+disk (the blocks hold ≤ Σ_t df(t) pruned posting rows;
-    * MEMORY_AND_DISK, so the failure mode is disk pressure, not OOM).
-    * Results are identical either way — the knob moves cost only. */
-  private def scanOnce: Boolean =
-    !"0".equals(System.getProperty("graft.bm25.scanOnce"))
-
   /** `pmod(fnv1a(token), nBuckets)` — the bucket routing, shared by the
     * build (partition column) and the serve (driver-side literals). */
   private def bucketCol(token: Column, nBuckets: Int): Column =
@@ -441,7 +430,7 @@ object Bm25IndexStore {
     // its exchange anyway — ≤ Σ_t df(t) rows, disk-backed if they
     // outgrow storage memory, freed with the RDD by the ContextCleaner
     // (no CacheManager residue — the library-wide no-residue rule).
-    val hits = if (scanOnce) hitsScan.localCheckpoint(false) else hitsScan
+    val hits = hitsScan.localCheckpoint(false)
 
     val (nDocs, avgdl) = corpusConstants(spark, path, tomb)
     val effPrune = resolvePruneDf(pruneDf, nDocs)
@@ -658,7 +647,7 @@ object Bm25IndexStore {
     // same bound as before), MEMORY_AND_DISK so oversize spills rather
     // than OOMs, freed with the RDD by the ContextCleaner (no
     // CacheManager residue).
-    val hits = if (scanOnce) hitsScan.localCheckpoint(false) else hitsScan
+    val hits = hitsScan.localCheckpoint(false)
 
     val (nDocs, avgdl) = corpusConstants(spark, path, tomb)
     val effPrune = resolvePruneDf(pruneDf, nDocs)
@@ -767,7 +756,7 @@ object Bm25IndexStore {
         // same one-scan discipline as the common path: the rebuilt df
         // aggregate materializes, every later consumer reads blocks
         val h0 = tomb.fold(hitC0)(t => hitC0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        val h = if (scanOnce) h0.localCheckpoint(false) else h0
+        val h = h0.localCheckpoint(false)
         val d = h.groupBy("token").agg(countDistinct(col("doc_id")).as("df"))
           .collect()
           .map(r => (r.getAs[String]("token"), r.getAs[Long]("df")))

@@ -42,28 +42,20 @@ object HybridSearch {
     * — but their driver-side construction (the BM25 serve's bounded
     * collects + checkpoint materialization; the embed + ANN probe
     * collects) ran sequentially, leaving the cluster idle during each
-    * leg's driver barriers. With the knob on (default), the legs build
-    * on two driver threads so one leg's jobs back-fill the other's
-    * barriers — Spark's scheduler runs concurrent jobs FIFO by design.
-    * Results are unchanged: the legs share only the eagerly
-    * checkpointed query frame and meet again at the deterministic
-    * fusion. `-Dgraft.hybrid.parallelLegs=0` restores serial
-    * construction (diagnostic/A-B arm). */
-  private def parallelLegs: Boolean =
-    !"0".equals(System.getProperty("graft.hybrid.parallelLegs"))
-
-  /** Build `a` and `b` on two threads when [[parallelLegs]]; serially
-    * otherwise. Exceptions from either leg propagate unchanged. */
-  private def joinLegs[A, B](a: => A, b: => B): (A, B) =
-    if (!parallelLegs) (a, b)
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fa = Future(a)
-      val rb = b
-      (Await.result(fa, Duration.Inf), rb)
-    }
+    * leg's driver barriers. The legs build on two driver threads so
+    * one leg's jobs back-fill the other's barriers — Spark's scheduler
+    * runs concurrent jobs FIFO by design. Results are unchanged: the
+    * legs share only the eagerly checkpointed query frame and meet
+    * again at the deterministic fusion. Exceptions from either leg
+    * propagate unchanged. */
+  private def joinLegs[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val fa = Future(a)
+    val rb = b
+    (Await.result(fa, Duration.Inf), rb)
+  }
 
   /** Fuse BM25 over `terms` with cosine against `queryText`'s embedding
     * (both embedded under `modelId`). Returns the top `k` as

@@ -43,14 +43,11 @@ import org.apache.spark.sql.types.StructType
   *     artifacts are overwritten with fresh job-named files), and the
   *     single-writer operating contract forbids a probe racing a
   *     half-written append.
-  *   - `-Dgraft.schemaMemo=0` disables (diagnostic/A-B arm).
   */
 object SchemaMemo {
   private final case class Entry(path: String, token: String, value: Any)
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
-
-  private def enabled: Boolean = !"0".equals(System.getProperty("graft.schemaMemo"))
 
   private def local(path: String): java.nio.file.Path =
     java.nio.file.Paths.get(
@@ -82,8 +79,7 @@ object SchemaMemo {
   }
 
   private def fresh(path: String): Option[String] =
-    if (!enabled) None
-    else try Some(token(path)) catch { case _: Throwable => None }
+    try Some(token(path)) catch { case _: Throwable => None }
 
   /** The value memoized for `(path, kind)` at file state `tok`, or
     * `read` stored in its place. The token is taken BEFORE the read, so

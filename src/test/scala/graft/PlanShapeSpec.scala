@@ -603,7 +603,7 @@ class PlanShapeSpec extends SparkSpec {
     // pruneDf=30), six topic words df=10 (essential)
     val syn = (0L until 60L).map(i => (i, s"the w${i % 6} filler$i the tail"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-bm25-shape-").toString
+    val idx = graft.util.Scratch.dir("bm25-shape").toString
     Bm25IndexStore.writeBm25Index(syn, idx, "text", "doc_id", nBuckets = 16)
 
     // counter deltas across one full serve (plan built AND executed):

@@ -22,7 +22,7 @@ class StoreEmptyAppendSpec extends SparkSpec {
   private def emptyDocs = docs.filter(col("doc_id") < 0)
 
   test("BM25 store: empty append leaves stats and serving unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-bm25-").toString
+    val dir = graft.util.Scratch.dir("empty-bm25").toString
     graft.similarity.Bm25IndexStore.writeBm25Index(docs, dir, "text", "doc_id", nBuckets = 8)
     def state() = (
       graft.similarity.Bm25IndexStore.describeBm25Index(spark, dir).collect().toSeq,
@@ -36,7 +36,7 @@ class StoreEmptyAppendSpec extends SparkSpec {
   }
 
   test("dedup store: empty append leaves stats and probing unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-dedup-").toString
+    val dir = graft.util.Scratch.dir("empty-dedup").toString
     graft.dedup.DedupIndexStore.writeDedupIndex(
       docs, dir, "text", "doc_id", numHashes = 16, shingleSize = 3, bands = 8, seed = 5L)
     def state() = (
@@ -55,7 +55,7 @@ class StoreEmptyAppendSpec extends SparkSpec {
     val vecs = (1L to 40L)
       .map(i => (i, Array.tabulate(4)(d => ((i * (d + 3)) % 7).toFloat).toSeq))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-ann-").toString
+    val dir = graft.util.Scratch.dir("empty-ann").toString
     graft.similarity.IndexStore.writeIvfPqIndex(vecs, dir, nCells = 2, m = 2, kCent = 4, seed = 3L)
     def state() = (
       graft.similarity.IndexStore.describeIvfIndex(spark, dir).collect().toSeq,

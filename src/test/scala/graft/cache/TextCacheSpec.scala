@@ -1,12 +1,11 @@
 package graft.cache
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.text.Tokenize
+import graft.util.Scratch
 
 class TextCacheSpec extends SparkSpec {
 
@@ -18,7 +17,7 @@ class TextCacheSpec extends SparkSpec {
   /** The reference's correctness contract: cached == uncached
     * (`tests/test_tokenize_cache.py:22-34`). */
   test("cached == uncached, and repeats hit the cache without recompute") {
-    val dir = Files.createTempDirectory("graft-cache").toString + "/cache"
+    val dir = Scratch.dir("cache").toString + "/cache"
     val cache = new TextCache(spark, dir)
     val df = Seq(
       (1L, "alpha beta gamma"),
@@ -47,7 +46,7 @@ class TextCacheSpec extends SparkSpec {
   }
 
   test("typed caches: cachedTokenize and cachedEmbed equal their uncached forms") {
-    val dir = Files.createTempDirectory("graft-cache3").toString + "/cache"
+    val dir = Scratch.dir("cache3").toString + "/cache"
     val df = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon")).toDF("doc_id", "text")
 
     val direct = df.select(col("doc_id"), Tokenize.tokenize(col("text")).as("tokens"))
@@ -68,7 +67,7 @@ class TextCacheSpec extends SparkSpec {
   }
 
   test("miss computation evaluates exactly once per distinct text (r3 double-compute fix)") {
-    val dir = Files.createTempDirectory("graft-cache4").toString + "/cache"
+    val dir = Scratch.dir("cache4").toString + "/cache"
     val cache = new TextCache(spark, dir)
     val df = Seq((1L, "aa"), (2L, "bb"), (3L, "aa")).toDF("doc_id", "text")
     val evals = spark.sparkContext.longAccumulator("compute-evals")
@@ -82,7 +81,7 @@ class TextCacheSpec extends SparkSpec {
   }
 
   test("cache keys are isolated: different key recomputes") {
-    val dir = Files.createTempDirectory("graft-cache2").toString + "/cache"
+    val dir = Scratch.dir("cache2").toString + "/cache"
     val cache = new TextCache(spark, dir)
     val df = Seq((1L, "some text here")).toDF("doc_id", "text")
     cache.withCachedColumn(df, "text", "keyA", "tokens")(tokenizeCompute).collect()

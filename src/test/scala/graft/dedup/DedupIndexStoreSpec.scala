@@ -19,8 +19,8 @@ class DedupIndexStoreSpec extends SparkSpec {
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
 
   private val Thresh = 0.125
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(name: String) =
+    graft.util.Scratch.dir(name).toString
 
   private def buildCfg(df: org.apache.spark.sql.DataFrame, path: String): Unit =
     DedupIndexStore.writeDedupIndex(df, path, "text", "doc_id",
@@ -35,7 +35,7 @@ class DedupIndexStoreSpec extends SparkSpec {
   test("probe equals the in-session near-dup computation on cross pairs") {
     val indexed = docs.filter($"doc_id" % 3 =!= 0)
     val probes = docs.filter($"doc_id" % 3 === 0)
-    val path = tmp("graft-dedupidx-")
+    val path = tmp("dedupidx")
     buildCfg(indexed, path)
 
     val got = probeSet(probes, path)
@@ -54,10 +54,10 @@ class DedupIndexStoreSpec extends SparkSpec {
   }
 
   test("append is indistinguishable from a one-shot build") {
-    val oneShot = tmp("graft-dedupidx-one-")
+    val oneShot = tmp("dedupidx-one")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), oneShot)
 
-    val inc = tmp("graft-dedupidx-inc-")
+    val inc = tmp("dedupidx-inc")
     buildCfg(docs.filter($"doc_id" % 3 === 1), inc)
     DedupIndexStore.appendToDedupIndex(
       docs.filter($"doc_id" % 3 === 2), inc, "text", "doc_id")
@@ -67,9 +67,9 @@ class DedupIndexStoreSpec extends SparkSpec {
   }
 
   test("append retried with the same batchId is idempotent") {
-    val oneShot = tmp("graft-dedupidx-one2-")
+    val oneShot = tmp("dedupidx-one2")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), oneShot)
-    val inc = tmp("graft-dedupidx-retry-")
+    val inc = tmp("dedupidx-retry")
     buildCfg(docs.filter($"doc_id" % 3 === 1), inc)
     val delta = docs.filter($"doc_id" % 3 === 2)
     DedupIndexStore.appendToDedupIndex(delta, inc, "text", "doc_id", batchId = "retry-me")
@@ -89,7 +89,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     val indexed = ((1L to 6L).map(i => (i, same)) :+ (7L -> "completely unrelated content"))
       .toDF("doc_id", "text")
     val probe = Seq((100L, same)).toDF("doc_id", "text")
-    val path = tmp("graft-dedupidx-cap-")
+    val path = tmp("dedupidx-cap")
     buildCfg(indexed, path)
 
     def hits(maxBucket: Int) =
@@ -103,18 +103,18 @@ class DedupIndexStoreSpec extends SparkSpec {
   }
 
   test("streaming ingest lands exactly once across a mid-stream crash") {
-    val oneShot = tmp("graft-dedupidx-sone-")
+    val oneShot = tmp("dedupidx-sone")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), oneShot)
 
-    val inc = tmp("graft-dedupidx-sinc-")
+    val inc = tmp("dedupidx-sinc")
     buildCfg(docs.filter($"doc_id" % 3 === 1), inc)
 
     // the %3==2 delta staged as three files → three micro-batches
-    val drop = tmp("graft-dedupidx-drop-")
+    val drop = tmp("dedupidx-drop")
     for (slice <- 0 until 3)
       docs.filter($"doc_id" % 3 === 2 && $"doc_id" % 9 === (2 + 3 * slice))
         .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-    val ckpt = tmp("graft-dedupidx-ckpt-")
+    val ckpt = tmp("dedupidx-ckpt")
     val schema = docs.schema
 
     def ingest(kill: Boolean) = {
@@ -162,13 +162,13 @@ class DedupIndexStoreSpec extends SparkSpec {
   test("deleted documents leave probes exactly as a rebuild without them") {
     val indexed = docs.filter($"doc_id" % 3 =!= 0)
     val probes = docs.filter($"doc_id" % 3 === 0)
-    val path = tmp("graft-dedupidx-del-")
+    val path = tmp("dedupidx-del")
     buildCfg(indexed, path)
     val full = probeSet(probes, path)
     DedupIndexStore.deleteFromDedupIndex(
       indexed.filter($"doc_id" % 5 === 1).select("doc_id"), path)
 
-    val rebuilt = tmp("graft-dedupidx-del-rb-")
+    val rebuilt = tmp("dedupidx-del-rb")
     buildCfg(indexed.filter($"doc_id" % 5 =!= 1), rebuilt)
 
     val afterDelete = probeSet(probes, path)
@@ -194,7 +194,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     val indexed = docs.filter($"doc_id" % 3 =!= 0)
     val probes = docs.filter($"doc_id" % 3 === 0)
     def deletedCopy(): String = {
-      val p = tmp("graft-dedupidx-grace-")
+      val p = tmp("dedupidx-grace")
       buildCfg(indexed, p)
       DedupIndexStore.deleteFromDedupIndex(
         indexed.filter($"doc_id" % 5 === 1).select("doc_id"), p)
@@ -229,7 +229,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     val same = "the quick brown fox jumps over the lazy dog again and again"
     val indexed = (1L to 6L).map(i => (i, same)).toDF("doc_id", "text")
     val probe = Seq((100L, same)).toDF("doc_id", "text")
-    val path = tmp("graft-dedupidx-capdel-")
+    val path = tmp("dedupidx-capdel")
     buildCfg(indexed, path)
     DedupIndexStore.deleteFromDedupIndex(Seq(1L, 2L).toDF("doc_id"), path)
 
@@ -250,7 +250,7 @@ class DedupIndexStoreSpec extends SparkSpec {
     val same = "the quick brown fox jumps over the lazy dog again and again"
     val indexed = ((1L to 6L).map(i => (i, same)) :+ (7L -> "completely unrelated content text"))
       .toDF("doc_id", "text")
-    val path = tmp("graft-dedupidx-stats-")
+    val path = tmp("dedupidx-stats")
     buildCfg(indexed, path)
 
     def stats() = DedupIndexStore.describeDedupIndex(spark, path)
@@ -273,7 +273,7 @@ class DedupIndexStoreSpec extends SparkSpec {
   }
 
   test("probe plan with live tombstones: still no shuffle joins, tombstones scanned once") {
-    val path = tmp("graft-dedupidx-delplan-")
+    val path = tmp("dedupidx-delplan")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), path)
     DedupIndexStore.deleteFromDedupIndex(Seq(1L).toDF("doc_id"), path)
     val plan = DedupIndexStore
@@ -287,7 +287,7 @@ class DedupIndexStoreSpec extends SparkSpec {
   }
 
   test("probe plan: all joins broadcast, each corpus artifact scanned once") {
-    val path = tmp("graft-dedupidx-plan-")
+    val path = tmp("dedupidx-plan")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), path)
     // string form of the static physical plan — the AQE wrapper hides
     // operator nodes from collect() (same posture as PlanShapeSpec)

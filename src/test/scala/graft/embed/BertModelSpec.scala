@@ -65,7 +65,7 @@ class BertModelSpec extends AnyFunSuite {
   }
 
   private def modelOf(tensors: Map[String, SafeTensors.Tensor], heads: Int): BertModel = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bert-")
+    val dir = graft.util.Scratch.dir("bert")
     val wPath = dir.resolve("model.safetensors").toString
     val vPath = dir.resolve("vocab.txt").toString
     SafeTensors.write(wPath, tensors.toSeq.sortBy(_._1))
@@ -77,7 +77,7 @@ class BertModelSpec extends AnyFunSuite {
   // ------------------------------------------------------------- tests
 
   test("safetensors round-trips shapes and F32 payloads exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-st-")
+    val dir = graft.util.Scratch.dir("st")
     val p = dir.resolve("t.safetensors").toString
     val a = tensor(Array(2, 3), Array(1.5f, -2.25f, 0f, 3.75f, Float.MinPositiveValue, -0f))
     val b = tensor(Array(4), Array(9f, 8f, 7f, 6f))
@@ -280,7 +280,7 @@ class BertModelSpec extends AnyFunSuite {
   test("registry serves the gated id via sys-props and fails fast without them") {
     val e = intercept[Exception] { EmbedderRegistry.ensure(BertWeightsGate.ModelId) }
     assert(e.getMessage.contains("GRAFT_BERT"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bert-gate-")
+    val dir = graft.util.Scratch.dir("bert-gate")
     SafeTensors.write(dir.resolve("model.safetensors").toString,
       checkpoint(layers = 1).toSeq.sortBy(_._1))
     java.nio.file.Files.write(dir.resolve("vocab.txt"),

@@ -17,7 +17,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
   private def docs = spark.read.parquet(s"$docsDir/documents.parquet")
 
   private def newIndex(of: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25idx-").toString
+    val dir = graft.util.Scratch.dir("bm25idx").toString
     Bm25IndexStore.writeBm25Index(of, dir, "text", "doc_id", nBuckets = 16)
     dir
   }
@@ -112,7 +112,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
       (i, s"the w${i % 6} filler$i the tail")
     }.toDF("doc_id", "text")
     val dir = {
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-prune-").toString
+      val d = graft.util.Scratch.dir("bm25-prune").toString
       Bm25IndexStore.writeBm25Index(syn, d, "text", "doc_id", nBuckets = 16)
       d
     }
@@ -174,7 +174,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
     // bitwise the disabled serve
     val syn = (0L until 120L).map(i => (i, s"the w${i % 12} filler$i the tail")).toDF("doc_id", "text")
     val dir = {
-      val d = java.nio.file.Files.createTempDirectory("graft-bm25-auto-").toString
+      val d = graft.util.Scratch.dir("bm25-auto").toString
       Bm25IndexStore.writeBm25Index(syn, d, "text", "doc_id", nBuckets = 16)
       d
     }
@@ -283,11 +283,11 @@ class Bm25IndexStoreSpec extends SparkSpec {
     val oneShot = newIndex(docs)
     val inc = newIndex(docs.filter(col("doc_id") % 2 === 0))
     // the odd half staged as three files → three micro-batches
-    val drop = java.nio.file.Files.createTempDirectory("graft-bm25-drop-").toString
+    val drop = graft.util.Scratch.dir("bm25-drop").toString
     for (slice <- 0 until 3)
       docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") % 6 === (1 + 2 * slice))
         .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bm25-ckpt-").toString
+    val ckpt = graft.util.Scratch.dir("bm25-ckpt").toString
     val schema = docs.schema
 
     def ingest(kill: Boolean) = {
@@ -414,7 +414,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
     }.sortBy(t => (t._1, -t._3, t._2))
 
   test("terms whose bucket directory does not exist serve exactly (sparse 1024-bucket index)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-sparse-").toString
+    val dir = graft.util.Scratch.dir("bm25-sparse").toString
     Bm25IndexStore.writeBm25Index(docs, dir, "text", "doc_id", nBuckets = 1024)
     val tree = new java.io.File(graft.util.ArtifactTree.resolve(spark, dir, "postings"))
     def exists(t: String) =

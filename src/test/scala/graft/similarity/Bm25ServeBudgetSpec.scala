@@ -22,7 +22,7 @@ class Bm25ServeBudgetSpec extends SparkSpec {
   }
 
   private def newIndex(docs: DataFrame, nBuckets: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-budget-").toString
+    val dir = graft.util.Scratch.dir("bm25-budget").toString
     Bm25IndexStore.writeBm25Index(docs, dir, "text", "doc_id", nBuckets = nBuckets)
     dir
   }

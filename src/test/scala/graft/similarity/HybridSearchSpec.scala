@@ -109,9 +109,9 @@ class HybridSearchSpec extends SparkSpec {
         "c" * (i % 7).toInt, "d" * (i % 4).toInt)
       (i, (terms ++ letters).filter(_.nonEmpty).mkString(" "))
     }.toDF("doc_id", "text")
-    val bm25Dir = java.nio.file.Files.createTempDirectory("hybrid-bm25-").toString
+    val bm25Dir = graft.util.Scratch.dir("hybrid-bm25").toString
     Bm25IndexStore.writeBm25Index(corpus, bm25Dir, "text", "doc_id", nBuckets = 8)
-    val annDir = java.nio.file.Files.createTempDirectory("hybrid-ann-").toString
+    val annDir = graft.util.Scratch.dir("hybrid-ann").toString
     val vecs = graft.embed.Embedders
       .embed(corpus, "text", "embedding", BatchModelId)
       .select($"doc_id".as("vec_id"), $"embedding")

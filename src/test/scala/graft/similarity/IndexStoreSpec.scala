@@ -34,15 +34,15 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.derivedCells(600000L) == 120) // the r18 probe corpus
     intercept[IllegalArgumentException] {
       IndexStore.writeIvfPqIndex(corpus(10, 8, 1L),
-        java.nio.file.Files.createTempDirectory("graft-ivf-auto-bad-").toString, nCells = 0)
+        graft.util.Scratch.dir("ivf-auto-bad").toString, nCells = 0)
     }
 
     // end-to-end: the zero-config build lands derivedCells(n) coarse
     // centroids and serves identically to the same-geometry explicit build
     val df = corpus(300, 16, seed = 23L)
-    val auto = java.nio.file.Files.createTempDirectory("graft-ivf-auto-").toString
+    val auto = graft.util.Scratch.dir("ivf-auto").toString
     IndexStore.writeIvfPqIndex(df, auto, m = 4, kCent = 8, seed = 7L, sampleSize = 300)
-    val explicit = java.nio.file.Files.createTempDirectory("graft-ivf-expl-").toString
+    val explicit = graft.util.Scratch.dir("ivf-expl").toString
     IndexStore.writeIvfPqIndex(df, explicit, nCells = 8, m = 4, kCent = 8, seed = 7L,
       sampleSize = 300)
     assert(spark.read.parquet(s"$auto/coarse").count() == IndexStore.derivedCells(300L))
@@ -55,7 +55,7 @@ class IndexStoreSpec extends SparkSpec {
   test("served top-k equals the in-session ADC+rerank pipeline exactly") {
     val df = corpus(300, 16, seed = 11L)
     val queries = df.filter($"vec_id" < 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val dir = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df, dir, m = 4, kCent = 8, seed = 7L, sampleSize = 300)
     val served = IndexStore.servePqTopK(queries, df, dir, k = 5, shortlistK = 20)
       .orderBy("query_id", "rank").collect().toSeq
@@ -68,7 +68,7 @@ class IndexStoreSpec extends SparkSpec {
   test("codebooks round-trip the [m][k][dsub] layout through parquet") {
     val df = corpus(200, 16, seed = 13L)
     val cbs = ProductQuant.trainedCodebooks(df, m = 4, k = 8, seed = 3L, sampleSize = 200)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val dir = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df, dir, m = 4, kCent = 8, seed = 3L, sampleSize = 200, codebooks = cbs)
     val back = IndexStore.readCodebooks(spark, dir)
     assert(back.map(_.map(_.toSeq).toSeq).toSeq == cbs.map(_.map(_.toSeq).toSeq).toSeq)
@@ -77,9 +77,9 @@ class IndexStoreSpec extends SparkSpec {
   test("append encodes deltas with the persisted codebooks — equals the one-shot build") {
     val df = corpus(300, 16, seed = 19L)
     val cbs = ProductQuant.trainedCodebooks(df, m = 4, k = 8, seed = 7L, sampleSize = 300)
-    val full = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val full = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df, full, m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs)
-    val inc = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val inc = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df.filter($"vec_id" < 150), inc,
       m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs)
     IndexStore.appendToPqIndex(df.filter($"vec_id" >= 150), inc)
@@ -93,7 +93,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("compaction recovers from a crashed prior compaction in either half-state") {
     val df = corpus(200, 16, seed = 23L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val dir = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df, dir, m = 4, kCent = 8, seed = 3L, sampleSize = 200)
     val q = df.filter($"vec_id" < 3)
     val expected = IndexStore.servePqTopK(q, df, dir, k = 5, shortlistK = 20)
@@ -119,7 +119,7 @@ class IndexStoreSpec extends SparkSpec {
     // so this half-state can only be inherited from the legacy layout).
     // Compaction must restore it before compacting into the versioned
     // layout.
-    val dirB = java.nio.file.Files.createTempDirectory("graft-indexstore-b-").toString
+    val dirB = graft.util.Scratch.dir("indexstore-b").toString
     IndexStore.writePqIndex(df, dirB, m = 4, kCent = 8, seed = 3L, sampleSize = 200)
     val rootB = java.nio.file.Paths.get(dirB)
     java.nio.file.Files.move(rootB.resolve("codes"), rootB.resolve("codes_precompact"))
@@ -134,11 +134,11 @@ class IndexStoreSpec extends SparkSpec {
   test("deleted vectors leave served results exactly as a rebuild without them") {
     val df = corpus(300, 16, seed = 29L)
     val cbs = ProductQuant.trainedCodebooks(df, m = 4, k = 8, seed = 7L, sampleSize = 300)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-del-").toString
+    val dir = graft.util.Scratch.dir("indexstore-del").toString
     IndexStore.writePqIndex(df, dir, m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs)
     IndexStore.deleteFromIndex(df.filter($"vec_id" % 5 === 1).select("vec_id"), dir)
 
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-indexstore-del-rb-").toString
+    val rebuilt = graft.util.Scratch.dir("indexstore-del-rb").toString
     IndexStore.writePqIndex(df.filter($"vec_id" % 5 =!= 1), rebuilt,
       m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs)
 
@@ -164,7 +164,7 @@ class IndexStoreSpec extends SparkSpec {
 
     // after compaction the id generation is reusable: append restores serving
     IndexStore.appendToPqIndex(df.filter($"vec_id" % 5 === 1), dir)
-    assert(serve(dir) == serve(java.nio.file.Files.createTempDirectory("graft-indexstore-del-full-").toString match {
+    assert(serve(dir) == serve(graft.util.Scratch.dir("indexstore-del-full").toString match {
       case full => IndexStore.writePqIndex(df, full, m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs); full
     }))
   }
@@ -173,12 +173,12 @@ class IndexStoreSpec extends SparkSpec {
     val df = corpus(300, 16, seed = 31L)
     val cents = Similarity.trainedCentroids(df, "vec_id", "embedding", 4, 7L, 300)
     val cbs = IvfPq.trainedResidualCodebooks(df, cents, "vec_id", "embedding", 4, 8, 7L, 300)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-ivfdel-").toString
+    val dir = graft.util.Scratch.dir("indexstore-ivfdel").toString
     IndexStore.writeIvfPqIndex(df, dir, nCells = 4, m = 4, kCent = 8,
       coarseCentroids = cents, residCodebooks = cbs)
     IndexStore.deleteFromIndex(df.filter($"vec_id" % 5 === 1).select("vec_id"), dir)
 
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-indexstore-ivfdel-rb-").toString
+    val rebuilt = graft.util.Scratch.dir("indexstore-ivfdel-rb").toString
     IndexStore.writeIvfPqIndex(df.filter($"vec_id" % 5 =!= 1), rebuilt, nCells = 4, m = 4, kCent = 8,
       coarseCentroids = cents, residCodebooks = cbs)
 
@@ -202,7 +202,7 @@ class IndexStoreSpec extends SparkSpec {
     val df = corpus(300, 16, seed = 41L)
     val cents = Similarity.trainedCentroids(df, "vec_id", "embedding", 4, 7L, 300)
     val cbs = IvfPq.trainedResidualCodebooks(df, cents, "vec_id", "embedding", 4, 8, 7L, 300)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-stats-").toString
+    val dir = graft.util.Scratch.dir("indexstore-stats").toString
     IndexStore.writeIvfPqIndex(df, dir, nCells = 4, m = 4, kCent = 8,
       coarseCentroids = cents, residCodebooks = cbs)
 
@@ -229,7 +229,7 @@ class IndexStoreSpec extends SparkSpec {
     val df = corpus(300, 16, seed = 37L)
     val cents = Similarity.trainedCentroids(df, "vec_id", "embedding", 4, 7L, 300)
     val cbs = IvfPq.trainedResidualCodebooks(df, cents, "vec_id", "embedding", 4, 8, 7L, 300)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-delplan-").toString
+    val dir = graft.util.Scratch.dir("indexstore-delplan").toString
     IndexStore.writeIvfPqIndex(df, dir, nCells = 4, m = 4, kCent = 8,
       coarseCentroids = cents, residCodebooks = cbs)
     IndexStore.deleteFromIndex(df.filter($"vec_id" % 5 === 1).select("vec_id"), dir)
@@ -246,7 +246,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("the served plan reads the persisted codes and never re-encodes or trains") {
     val df = corpus(200, 16, seed = 17L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-indexstore-").toString
+    val dir = graft.util.Scratch.dir("indexstore").toString
     IndexStore.writePqIndex(df, dir, m = 4, kCent = 8, seed = 3L, sampleSize = 200)
     val served = IndexStore.servePqTopK(df.filter($"vec_id" < 2), df, dir, k = 3, shortlistK = 10)
     // the persisted codes table appears as a parquet scan leaf...

@@ -32,19 +32,19 @@ class StreamIndexIngestSpec extends SparkSpec {
     try {
       val cbs = ProductQuant.trainedCodebooks(df, m = 4, k = 8, seed = 7L, sampleSize = 300)
       // one-shot reference build over the full corpus
-      val full = java.nio.file.Files.createTempDirectory("graft-ingest-full-").toString
+      val full = graft.util.Scratch.dir("ingest-full").toString
       IndexStore.writePqIndex(df, full, m = 4, kCent = 8, seed = 7L, sampleSize = 300,
         codebooks = cbs)
 
       // streamed build: base over the first half, 3 delta files for the rest
-      val inc = java.nio.file.Files.createTempDirectory("graft-ingest-inc-").toString
+      val inc = graft.util.Scratch.dir("ingest-inc").toString
       IndexStore.writePqIndex(df.filter($"vec_id" < 150), inc,
         m = 4, kCent = 8, seed = 7L, sampleSize = 300, codebooks = cbs)
-      val drop = java.nio.file.Files.createTempDirectory("graft-ingest-drop-").toString
+      val drop = graft.util.Scratch.dir("ingest-drop").toString
       for (slice <- 0 until 3)
         df.filter($"vec_id" >= 150 && $"vec_id" % 3 === slice)
           .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ingest-ckpt-").toString
+      val ckpt = graft.util.Scratch.dir("ingest-ckpt").toString
       val schema = df.schema
 
       // run 1: the ingest sink itself throws before batch 1 writes —
@@ -120,7 +120,7 @@ class StreamIndexIngestSpec extends SparkSpec {
           coarseCentroids = cents, residCodebooks = cbs)
         .orderBy("query_id", "rank").collect().toSeq
 
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-index-").toString
+      val dir = graft.util.Scratch.dir("ivf-index").toString
       IndexStore.writeIvfPqIndex(df, dir, nCells = 8, m = 4, kCent = 8, seed = 5L,
         sampleSize = 400, coarseCentroids = cents, residCodebooks = cbs)
       // cell-partitioned layout on disk
@@ -153,7 +153,7 @@ class StreamIndexIngestSpec extends SparkSpec {
           m = 4, kCent = 8, seed = 5L, sampleSize = 400,
           coarseCentroids = cents, residCodebooks = cbs)
         .orderBy("query_id", "rank").collect().toSeq
-      val dir = java.nio.file.Files.createTempDirectory("graft-opqivf-").toString
+      val dir = graft.util.Scratch.dir("opqivf").toString
       IndexStore.writeOpqIvfIndex(df, dir, rot, cents, cbs)
       val served = IndexStore.serveOpqIvfTopK(queries, dir, k = 5, nProbe = 2)
         .orderBy("query_id", "rank").collect().toSeq
@@ -167,10 +167,10 @@ class StreamIndexIngestSpec extends SparkSpec {
       val queries = df.filter($"vec_id" < 4)
       val cents = Similarity.trainedCentroids(df, nCells = 8, seed = 5L, sampleSize = 400)
       val cbs = IvfPq.trainedResidualCodebooks(df, cents, m = 4, k = 8, seed = 5L, sampleSize = 400)
-      val full = java.nio.file.Files.createTempDirectory("graft-ivf-full-").toString
+      val full = graft.util.Scratch.dir("ivf-full").toString
       IndexStore.writeIvfPqIndex(df, full, nCells = 8, m = 4, kCent = 8, seed = 5L,
         sampleSize = 400, coarseCentroids = cents, residCodebooks = cbs)
-      val inc = java.nio.file.Files.createTempDirectory("graft-ivf-inc-").toString
+      val inc = graft.util.Scratch.dir("ivf-inc").toString
       IndexStore.writeIvfPqIndex(df.filter($"vec_id" < 200), inc, nCells = 8, m = 4,
         kCent = 8, seed = 5L, sampleSize = 400, coarseCentroids = cents, residCodebooks = cbs)
       IndexStore.appendToIvfPqIndex(df.filter($"vec_id" >= 200), inc)

@@ -15,7 +15,7 @@ class BucketingSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("join of two tables bucketed on the same key plans without exchanges") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse-").toString
+    val wh = graft.util.Scratch.dir("warehouse").toString
     val db = s"graft_bucketing_${System.nanoTime()}"
     spark.sql(s"CREATE DATABASE $db LOCATION '$wh/$db'")
     // the fixture tables are broadcast-small, which would bypass the
@@ -44,7 +44,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("aggregation on the bucket key also skips the shuffle") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse2-").toString
+    val wh = graft.util.Scratch.dir("warehouse2").toString
     val db = s"graft_bucketing_agg_${System.nanoTime()}"
     spark.sql(s"CREATE DATABASE $db LOCATION '$wh/$db'")
     try {

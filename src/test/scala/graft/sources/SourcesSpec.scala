@@ -12,12 +12,12 @@ class SourcesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/out"
+  private def tmp(name: String): String =
+    graft.util.Scratch.dir(name).toString + "/out"
 
   test("documents round-trip through JSON with explicit schema") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val path = tmp("graft-json-")
+    val path = tmp("json")
     docs.write.json(path)
     val back = spark.read.schema(docs.schema).json(path)
     assert(back.count() == docs.count())
@@ -33,7 +33,7 @@ class SourcesSpec extends SparkSpec {
         col("doc_id"),
         graft.text.TextAnalysis.langId(col("text")).as("pred_lang"),
         graft.text.TextFunctions.wordCount(col("text")).as("word_cnt"))
-    val path = tmp("graft-csv-")
+    val path = tmp("csv")
     derived.write.option("header", "true").csv(path)
     val back = spark.read.option("header", "true").schema(derived.schema).csv(path)
     assert(back.count() == derived.count())
@@ -44,7 +44,7 @@ class SourcesSpec extends SparkSpec {
 
   test("partitioned parquet sink prunes partitions on read") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val path = tmp("graft-part-")
+    val path = tmp("part")
     docs.write.partitionBy("lang").parquet(path)
     val en = spark.read.parquet(path).filter(col("lang") === "en")
     val plan = en.queryExecution.executedPlan.toString

@@ -17,7 +17,7 @@ class TokenStringsRewriteSpec extends SparkSpec {
   // otherwise fold the whole projection at optimize time, leaving no
   // plan to inspect
   private lazy val docsPath: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-tsr-").toString + "/docs"
+    val p = graft.util.Scratch.dir("tsr").toString + "/docs"
     Seq((1L, "spark window merge"), (2L, "the the fast")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(p)
     p

@@ -18,7 +18,7 @@ class FileStreamSpec extends SparkSpec {
   /** File streams read directories; the testdata ships single files —
     * stage one into a scratch dir (read-only source, untouched). */
   private def staged(table: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-stream-$table-")
+    val d = graft.util.Scratch.dir(s"stream-$table")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/$table.parquet"),
       d.resolve(s"$table.parquet"))

@@ -16,7 +16,7 @@ class HeavyHittersStateSpec extends SparkSpec {
   test("summary under eviction keeps the MG undercount guarantee end-to-end") {
     // k = 2 over 3 distinct tokens: decrements MUST fire; the guarantee
     // est(x) <= true(x) <= est(x) + N/(k+1) still holds for emitted rows
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-hh-src-").toString
+    val srcDir = graft.util.Scratch.dir("hh-src").toString
     val docs = Seq(
       (0L, "en", "alpha alpha alpha alpha beta beta gamma"),
       (1L, "en", "alpha alpha beta gamma"),

@@ -21,7 +21,7 @@ import graft.SparkSpec
   *     the FINAL watermark passed.
   *
   * The corpus (window 1 h, delay 2 h; batches staged through the
-  * production [[graft.SparkEntry.stagedMultiDirForTest]] event_id%10
+  * production [[graft.SparkEntry.stagedMultiDir]] event_id%10
   * split, `maxFilesPerTrigger=1`):
   *
   *   batch-0 (ids 1–7): 00:30 | 01:15, 01:45 | 12:00   → wm after b0 = 10:00
@@ -59,10 +59,10 @@ class LateWindowSpec extends SparkSpec {
       .toDF("event_id", "ts", "value")
       .withColumn("event_type", lit("x"))
 
-    val src = java.nio.file.Files.createTempDirectory("graft-latewin-src-")
+    val src = graft.util.Scratch.dir("latewin-src")
     rows.repartition(1).write.mode("overwrite").parquet(src.toString)
 
-    val staged = graft.SparkEntry.stagedMultiDirForTest(spark, src.toString)
+    val staged = graft.SparkEntry.stagedMultiDir(spark, src.toString)
     val stream = spark.readStream
       .schema(rows.schema)
       .option("maxFilesPerTrigger", "1")

@@ -19,14 +19,14 @@ class StreamRestartSpec extends SparkSpec {
     // batches; files are sliced by i/30 so every file carries ALL
     // three lang keys (10 docs each) — a single drained batch is then
     // distinguishable from a full drain in the per-key totals
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-restart-src-").toString
+    val srcDir = graft.util.Scratch.dir("restart-src").toString
     val docs = (0 until 90).map(i => (i.toLong, s"lang${i % 3}", "spark window " * (i % 4 + 1)))
     for (part <- 0 until 3)
       docs.filter(_._1 / 30 == part).toDF("doc_id", "lang", "text")
         .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/batch$part")
     val schema = spark.read.parquet(s"$srcDir/batch0").schema
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt-").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft-restart-sink-").toString + "/out"
+    val ckpt = graft.util.Scratch.dir("restart-ckpt").toString
+    val sink = graft.util.Scratch.dir("restart-sink").toString + "/out"
 
     // foreachBatch: the checkpoint-recoverable sink (memory is not).
     // Append of update rows is at-least-once on restart, but totals are

@@ -15,7 +15,7 @@ class ArtifactTreeSpec extends SparkSpec {
 
   private def freshTree(): (String, java.nio.file.Path) = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-atree-")
+    val root = Scratch.dir("atree")
     (1 to 100).map(i => (i.toLong, "old")).toDF("id", "gen")
       .write.mode("overwrite").parquet(s"$root/data")
     (root.toString, root)
