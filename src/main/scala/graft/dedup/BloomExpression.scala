@@ -1,14 +1,12 @@
 package graft.dedup
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+import graft.sql.CompanionRun
 import graft.text.Fnv1aExpr
 
 /** Native Bloom-probe expression for the LARGE-bitset decontamination
@@ -21,7 +19,7 @@ import graft.text.Fnv1aExpr
   * eval sets (2^30 bits = 128 MiB serialized into every task's plan and
   * through codegen). Above the threshold the words ride a BROADCAST
   * variable instead (one copy per executor, torrent-distributed), and
-  * this expression consumes it as a codegen reference object — the
+  * this expression takes it as a constant argument of `run` — the
   * [[graft.similarity.LshBucketsExpr]] pattern applied to a data-dependent
   * payload. Hash positions are bit-identical to the literal path's Column
   * algebra (`pmod(fnv1a64('j:' || key), mBits)`), so the two paths flag
@@ -32,7 +30,7 @@ case class BloomFlaggedExpr(
     bloom: Broadcast[Array[Long]],
     mBits: Int,
     numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) if mBits >= 64 && (mBits & (mBits - 1)) == 0 && numHashes >= 1 =>
@@ -51,21 +49,10 @@ case class BloomFlaggedExpr(
 
   override def prettyName: String = "bloom_flagged"
 
-  override def eval(input: InternalRow): Any =
-    BloomFlaggedExpr.run(child.eval(input).asInstanceOf[ArrayData], bloom, mBits, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val bcRef = ctx.addReferenceObj("bloomBc", bloom, classOf[Broadcast[Array[Long]]].getName)
-    val helper = BloomFlaggedExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        long ${ev.value} = $helper.MODULE$$.run(
-          ${childGen.isNull} ? null : ${childGen.value}, $bcRef, $mBits, $numHashes);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = BloomFlaggedExpr
+  override protected def constants: Seq[Expression] = Seq(
+    CompanionRun.obj(bloom, classOf[Broadcast[_]]), Literal(mBits), Literal(numHashes))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): BloomFlaggedExpr =
     copy(child = newChild)

@@ -1,13 +1,12 @@
 package graft.dedup
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for the per-document MinHash signature:
   * text → `array<long>` of `numHashes` minima of the seeded universal
@@ -19,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF8String→String→Array→Catalyst converter stack per row while
   * breaking whole-stage codegen across the projection. The
   * [[graft.text.ShingleKeysExpr]] escape hatch applied to signatures:
-  * `doGenCode` calls one static helper, the scan stays fused. */
+  * one static call to `run` ([[graft.sql.CompanionRun]]), the scan stays fused. */
 case class MinHashExpr(child: Expression, numHashes: Int, shingleSize: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -38,21 +37,10 @@ case class MinHashExpr(child: Expression, numHashes: Int, shingleSize: Int, seed
 
   override def prettyName: String = "minhash_signature"
 
-  override def eval(input: InternalRow): Any =
-    MinHashExpr.run(child.eval(input).asInstanceOf[UTF8String], numHashes, shingleSize, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = MinHashExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value},
-            $numHashes, $shingleSize, ${seed}L);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = MinHashExpr
+  override protected def constants: Seq[Expression] =
+    Seq(Literal(numHashes), Literal(shingleSize), Literal(seed))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): MinHashExpr =
     copy(child = newChild)
@@ -71,7 +59,7 @@ object MinHashExpr {
   * token hashes, per-bit majority votes) — the same escape-hatch
   * argument as [[MinHashExpr]]: every token votes on 64 bits, the UDF
   * wrapper was the only non-codegen operator in the fingerprint scan. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
+case class SimHashExpr(child: Expression) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -84,20 +72,8 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "simhash64"
 
-  override def eval(input: InternalRow): Any =
-    SimHashExpr.run(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = SimHashExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        long ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value});
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = SimHashExpr
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
     copy(child = newChild)
@@ -118,7 +94,7 @@ object SimHashExpr {
   * Last of the fingerprint-family UDF conversions: the LSH pairs scan now
   * carries no ScalaUDF anywhere (plan-pinned) — the converter stack and
   * the codegen break it forced on the explode projection are gone. */
-case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression {
+case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) if bands > 0 => TypeCheckResult.TypeCheckSuccess
@@ -139,20 +115,9 @@ case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression
 
   override def prettyName: String = "lsh_band_hashes"
 
-  override def eval(input: InternalRow): Any =
-    BandHashesExpr.run(child.eval(input).asInstanceOf[ArrayData], bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = BandHashesExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $bands);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = BandHashesExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(bands))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): BandHashesExpr =
     copy(child = newChild)
@@ -203,7 +168,7 @@ object BandHashesExpr {
   * Inputs must be sorted ascending and duplicate-free (`sort_array` over
   * a `collect_set`); the caller owns that invariant. */
 case class SortedIntersectCountExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
@@ -217,17 +182,8 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
 
   override def prettyName: String = "sorted_intersect_count"
 
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) null
-    else SortedIntersectCountExpr.run(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = SortedIntersectCountExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $helper.MODULE$$.run($l, $r);")
-  }
+  override protected def companion: AnyRef = SortedIntersectCountExpr
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =

@@ -3,9 +3,10 @@ package graft.embed
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+import graft.sql.CompanionRun
 
 /** Native symmetric int8 quantization: `array<float>` →
   * `struct<scale double, qvec array<int>>` in one fused loop.
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types._
   *   - zero vectors → scale 0.0, all-zero codes; null vector → null
   *     struct (field access then yields the Column program's two nulls).
   */
-case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
+case class QuantizeInt8Expr(child: Expression) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
@@ -42,19 +43,8 @@ case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
   // nullable even over a non-null child: a null ELEMENT nulls the struct
   override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else QuantizeInt8Expr.run(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = QuantizeInt8Expr.getClass.getName
-    val r = ctx.freshName("qRes")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.InternalRow $r = $helper.MODULE$$.run($c);
-      if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-    """)
-  }
+  override protected def companion: AnyRef = QuantizeInt8Expr
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): QuantizeInt8Expr =
     copy(child = newChild)

@@ -1,11 +1,11 @@
 package graft.similarity
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for float-array cosine similarity.
   *
@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * scores (measured 17 s → ~1 s for `q_semdedup` at sf0.1). This
   * expression does the one fused loop inside whole-stage codegen, the
   * [[NearestCellsExpr]] pattern applied to a binary input. */
-case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSimExpr(left: Expression, right: Expression)
+    extends BinaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -38,22 +39,8 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
 
   override def prettyName: String = "cosine_sim"
 
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input).asInstanceOf[ArrayData]
-    if (a == null) return null
-    val b = right.eval(input).asInstanceOf[ArrayData]
-    if (b == null) return null
-    CosineSimExpr.run(a, b)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = CosineSimExpr.getClass.getName
-    val r = ctx.freshName("cosRes")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object $r = $helper.MODULE$$.run($a, $b);
-      if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Double) $r).doubleValue(); }
-    """)
-  }
+  override protected def companion: AnyRef = CosineSimExpr
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimExpr =
@@ -70,7 +57,8 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
   * OUTSIDE the int8 domain: on a 32-bit product overflow ANSI mode makes
   * the Column formulation throw, while this loop wraps — unreachable for
   * quantized codes, spec-pinned equal on the full ±127 domain. */
-case class IntDotExpr(left: Expression, right: Expression) extends BinaryExpression {
+case class IntDotExpr(left: Expression, right: Expression)
+    extends BinaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -88,22 +76,8 @@ case class IntDotExpr(left: Expression, right: Expression) extends BinaryExpress
 
   override def prettyName: String = "int_dot"
 
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input).asInstanceOf[ArrayData]
-    if (a == null) return null
-    val b = right.eval(input).asInstanceOf[ArrayData]
-    if (b == null) return null
-    IntDotExpr.run(a, b)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = IntDotExpr.getClass.getName
-    val r = ctx.freshName("dotRes")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object $r = $helper.MODULE$$.run($a, $b);
-      if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) $r).longValue(); }
-    """)
-  }
+  override protected def companion: AnyRef = IntDotExpr
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDotExpr =

@@ -1,13 +1,11 @@
 package graft.similarity
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for sign-LSH bucket keys: `array<float>` →
   * `array<struct<table int, bucket long>>`, one struct per table, bucket
@@ -21,7 +19,7 @@ import org.apache.spark.sql.types._
   * dim) per executor JVM; values are bit-identical (the planes come from
   * the same [[Similarity.lshPlanes]] generator the oracle inlines). */
 case class LshBucketsExpr(child: Expression, tables: Int, bits: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if tables > 0 && bits > 0 && bits <= 64 =>
@@ -44,21 +42,10 @@ case class LshBucketsExpr(child: Expression, tables: Int, bits: Int, seed: Long)
 
   override def prettyName: String = "lsh_buckets"
 
-  override def eval(input: InternalRow): Any =
-    LshBucketsExpr.run(child.eval(input).asInstanceOf[ArrayData], tables, bits, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = LshBucketsExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value},
-            $tables, $bits, ${seed}L);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = LshBucketsExpr
+  override protected def constants: Seq[Expression] =
+    Seq(Literal(tables), Literal(bits), Literal(seed))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): LshBucketsExpr =
     copy(child = newChild)

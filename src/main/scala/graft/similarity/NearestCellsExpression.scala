@@ -1,12 +1,11 @@
 package graft.similarity
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for IVF cell routing: `array<float>` →
   * the `nProbe` nearest coarse-quantizer cells as `array<int>`, ordered
@@ -16,11 +15,11 @@ import org.apache.spark.sql.types._
   * doubles (the [[Similarity]] `dist2` left-to-right fold the oracle
   * re-derives), but the scan stays codegen'd and vector components are
   * read straight from `ArrayData` instead of boxing through
-  * `Seq[Float]`. The trained centroid matrix is embedded via codegen's
-  * reference-object mechanism — driver-computed config shipped once per
-  * plan, the `trainedCentroids` shared-config pattern. */
+  * `Seq[Float]`. The trained centroid matrix is a constant object
+  * argument of `run` — driver-computed config shipped once per plan, the
+  * `trainedCentroids` shared-config pattern. */
 case class NearestCellsExpr(child: Expression, centroids: Array[Array[Float]], nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if centroids.nonEmpty && nProbe >= 1 =>
@@ -37,16 +36,10 @@ case class NearestCellsExpr(child: Expression, centroids: Array[Array[Float]], n
 
   override def prettyName: String = "nearest_cells"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else NearestCellsExpr.run(v, centroids, nProbe)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val helper = NearestCellsExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $cents, $nProbe);")
-  }
+  override protected def companion: AnyRef = NearestCellsExpr
+  override protected def constants: Seq[Expression] = Seq(
+    CompanionRun.obj(centroids, classOf[Array[Array[Float]]]), Literal(nProbe))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =
     copy(child = newChild)

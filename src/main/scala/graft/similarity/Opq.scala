@@ -1,13 +1,13 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+
+import graft.sql.CompanionRun
 
 /** Optimized Product Quantization (Ge et al. 2013, "Optimized Product
   * Quantization for Approximate Nearest Neighbor Search", CVPR —
@@ -142,7 +142,7 @@ object Opq {
   * `y_i = float(Σ_j R[i][j]·x_j)` with double accumulation in index order
   * (the DuckDB `CAST(list_inner_product(rv, x) AS FLOAT)` contract). */
 case class MatVecExpr(child: Expression, matrix: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if matrix.nonEmpty && matrix.forall(_.length == matrix.head.length) =>
@@ -158,16 +158,10 @@ case class MatVecExpr(child: Expression, matrix: Array[Array[Double]])
 
   override def prettyName: String = "mat_vec"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else MatVecExpr.run(v, matrix)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mref = ctx.addReferenceObj("matrix", matrix, "double[][]")
-    val helper = MatVecExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $mref);")
-  }
+  override protected def companion: AnyRef = MatVecExpr
+  override protected def constants: Seq[Expression] =
+    Seq(CompanionRun.obj(matrix, classOf[Array[Array[Double]]]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): MatVecExpr =
     copy(child = newChild)

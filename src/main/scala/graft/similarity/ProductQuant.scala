@@ -1,14 +1,14 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sql.CompanionRun
 
 /** Product quantization (Jégou, Douze & Schmid 2011, "Product
   * Quantization for Nearest Neighbor Search", IEEE TPAMI 33(1)) — the
@@ -479,7 +479,7 @@ object IvfPq {
 /** Native codegen'd PQ encoder: `array<float>` → `array<int>` of `m`
   * per-subspace argmin codes (strict `<`: ties keep the lowest code). */
 case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if codebooks.nonEmpty && codebooks.forall(_.nonEmpty) =>
@@ -495,16 +495,10 @@ case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Float]]]
 
   override def prettyName: String = "pq_encode"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else PqEncodeExpr.run(v, codebooks)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbs = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    val helper = PqEncodeExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $cbs);")
-  }
+  override protected def companion: AnyRef = PqEncodeExpr
+  override protected def constants: Seq[Expression] =
+    Seq(CompanionRun.obj(codebooks, classOf[Array[Array[Array[Float]]]]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
     copy(child = newChild)
@@ -537,7 +531,7 @@ object PqEncodeExpr {
 /** Native PQ ADC lookup table: query `array<float>` →
   * `array<array<double>>` of `[m][k]` per-subspace squared distances. */
 case class PqLutExpr(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if codebooks.nonEmpty && codebooks.forall(_.nonEmpty) =>
@@ -554,16 +548,10 @@ case class PqLutExpr(child: Expression, codebooks: Array[Array[Array[Float]]])
 
   override def prettyName: String = "pq_lut"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else PqLutExpr.run(v, codebooks)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbs = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    val helper = PqLutExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $cbs);")
-  }
+  override protected def companion: AnyRef = PqLutExpr
+  override protected def constants: Seq[Expression] =
+    Seq(CompanionRun.obj(codebooks, classOf[Array[Array[Array[Float]]]]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): PqLutExpr =
     copy(child = newChild)
@@ -614,7 +602,7 @@ case class PqEncodeResidExpr(
     child: Expression,
     centroids: Array[Array[Float]],
     codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if centroids.nonEmpty && codebooks.nonEmpty =>
@@ -630,17 +618,11 @@ case class PqEncodeResidExpr(
 
   override def prettyName: String = "ivfpq_encode"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else PqEncodeResidExpr.run(v, centroids, codebooks)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val cbs = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    val helper = PqEncodeResidExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $cents, $cbs);")
-  }
+  override protected def companion: AnyRef = PqEncodeResidExpr
+  override protected def constants: Seq[Expression] = Seq(
+    CompanionRun.obj(centroids, classOf[Array[Array[Float]]]),
+    CompanionRun.obj(codebooks, classOf[Array[Array[Array[Float]]]]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeResidExpr =
     copy(child = newChild)
@@ -682,7 +664,7 @@ case class PqLutResidExpr(
     right: Expression,
     centroids: Array[Array[Float]],
     codebooks: Array[Array[Array[Float]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(FloatType, _), IntegerType) if centroids.nonEmpty && codebooks.nonEmpty =>
@@ -697,20 +679,11 @@ case class PqLutResidExpr(
 
   override def prettyName: String = "ivfpq_lut"
 
-  override def eval(input: InternalRow): Any = {
-    val v = left.eval(input)
-    val c = right.eval(input)
-    if (v == null || c == null) null
-    else PqLutResidExpr.run(v.asInstanceOf[ArrayData], c.asInstanceOf[Int], centroids, codebooks)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val cbs = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    val helper = PqLutResidExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev,
-      (v, c) => s"${ev.value} = $helper.MODULE$$.run($v, $c, $cents, $cbs);")
-  }
+  override protected def companion: AnyRef = PqLutResidExpr
+  override protected def constants: Seq[Expression] = Seq(
+    CompanionRun.obj(centroids, classOf[Array[Array[Float]]]),
+    CompanionRun.obj(codebooks, classOf[Array[Array[Array[Float]]]]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqLutResidExpr =

@@ -1,12 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native projection of a token-struct array to its token strings —
   * the `transform(tokenize(...), t => t.getField("token"))` pattern that
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * lambda-binding pass between two codegen'd expressions; this keeps the
   * scan fused. Value parity with the HOF: element-for-element equal,
   * null in → null out. */
-case class TokenStringsExpr(child: Expression) extends UnaryExpression {
+case class TokenStringsExpr(child: Expression) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(s: StructType, _) if s.fieldNames.contains("token") &&
@@ -41,15 +41,9 @@ case class TokenStringsExpr(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "token_strings"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else TokenStringsExpr.run(v, tokenIdx, numFields)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = TokenStringsExpr.getClass.getName
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $tokenIdx, $numFields);")
-  }
+  override protected def companion: AnyRef = TokenStringsExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(tokenIdx), Literal(numFields))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): TokenStringsExpr =
     copy(child = newChild)
@@ -79,7 +73,7 @@ object TokenStringsExpr {
   * too-short inputs yield the empty array, as the `when/otherwise`
   * guards did. */
 case class AdjacentPairsExpr(child: Expression, window: Int, maxTokens: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) if window >= 1 && maxTokens >= 2 =>
@@ -102,20 +96,9 @@ case class AdjacentPairsExpr(child: Expression, window: Int, maxTokens: Int)
 
   override def prettyName: String = "adjacent_pairs"
 
-  override def eval(input: InternalRow): Any =
-    AdjacentPairsExpr.run(child.eval(input).asInstanceOf[ArrayData], window, maxTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = AdjacentPairsExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $window, $maxTokens);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = AdjacentPairsExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(window), Literal(maxTokens))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): AdjacentPairsExpr =
     copy(child = newChild)
@@ -129,7 +112,8 @@ case class AdjacentPairsExpr(child: Expression, window: Int, maxTokens: Int)
   * never equal the term (the HOF predicate's null → false), null array
   * → null (size(null) is -1 under legacy conf, null under default —
   * tokenize output is non-null, so the branch is unreachable here). */
-case class ArrayCountEqExpr(child: Expression, term: String) extends UnaryExpression {
+case class ArrayCountEqExpr(child: Expression, term: String)
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -142,20 +126,10 @@ case class ArrayCountEqExpr(child: Expression, term: String) extends UnaryExpres
 
   override def prettyName: String = "array_count_eq"
 
-  @transient private lazy val termUtf8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(term)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    if (v == null) null else ArrayCountEqExpr.run(v, termUtf8)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = ArrayCountEqExpr.getClass.getName
-    val termRef = ctx.addReferenceObj("termUtf8", termUtf8,
-      "org.apache.spark.unsafe.types.UTF8String")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.MODULE$$.run($c, $termRef);")
-  }
+  override protected def companion: AnyRef = ArrayCountEqExpr
+  override protected def constants: Seq[Expression] =
+    Seq(CompanionRun.obj(UTF8String.fromString(term), classOf[UTF8String]))
+  override protected def nullInNullOut: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): ArrayCountEqExpr =
     copy(child = newChild)
@@ -163,7 +137,7 @@ case class ArrayCountEqExpr(child: Expression, term: String) extends UnaryExpres
 
 object ArrayCountEqExpr {
   /** Shared by interpreted `eval` and generated code. */
-  def run(v: ArrayData, term: org.apache.spark.unsafe.types.UTF8String): Int = {
+  def run(v: ArrayData, term: UTF8String): Int = {
     val n = v.numElements()
     var count = 0
     var i = 0

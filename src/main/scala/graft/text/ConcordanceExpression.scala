@@ -2,14 +2,13 @@ package graft.text
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for the concordance (KWIC) operator: text →
   * `array<struct<left_context, matched_text, right_context, start_idx,
@@ -27,7 +26,7 @@ case class ConcordanceExpr(
     numRightTokens: Int,
     regex: Boolean,
     caseSensitive: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -40,28 +39,14 @@ case class ConcordanceExpr(
 
   override def prettyName: String = "concordance"
 
-  @transient private lazy val compiled: Pattern =
-    if (searchWord == null || searchWord.isEmpty) null
-    else Concordance.compilePattern(searchWord, regex, caseSensitive)
-
-  override def eval(input: InternalRow): Any =
-    ConcordanceExpr.run(
-      child.eval(input).asInstanceOf[UTF8String],
-      compiled, numLeftTokens, numRightTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val pat = ctx.addReferenceObj("pattern", compiled, "java.util.regex.Pattern")
-    val helper = ConcordanceExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value},
-            $pat, $numLeftTokens, $numRightTokens);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = ConcordanceExpr
+  override protected def constants: Seq[Expression] = Seq(
+    CompanionRun.obj(
+      if (searchWord == null || searchWord.isEmpty) null
+      else Concordance.compilePattern(searchWord, regex, caseSensitive),
+      classOf[Pattern]),
+    Literal(numLeftTokens), Literal(numRightTokens))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): ConcordanceExpr =
     copy(child = newChild)

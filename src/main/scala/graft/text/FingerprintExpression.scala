@@ -1,12 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for the document-fingerprint rolling hash:
   * `h = (h·31 + codepoint) mod 1e9+7` over the Unicode code points of the
@@ -18,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * diverged from the documented code-point contract (and from DuckDB's
   * `unicode()`) on non-ASCII corpora; (b) performance — one code-point walk
   * per row instead of materializing a per-character array. Stays inside
-  * whole-stage codegen via a static `doGenCode` call, mirroring
+  * whole-stage codegen as a static call ([[graft.sql.CompanionRun]]), mirroring
   * [[TokenizeExpr]].
   */
-case class CodePointHashExpr(child: Expression) extends UnaryExpression {
+case class CodePointHashExpr(child: Expression) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -34,20 +33,8 @@ case class CodePointHashExpr(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "codepoint_rolling_hash"
 
-  override def eval(input: InternalRow): Any =
-    CodePointHashExpr.run(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = CodePointHashExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        long ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value});
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = CodePointHashExpr
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): CodePointHashExpr =
     copy(child = newChild)

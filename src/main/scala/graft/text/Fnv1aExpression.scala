@@ -1,12 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for FNV-1a 64 over the Unicode code points
   * of a string; null → hash of the empty string (the FNV offset basis).
@@ -21,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * FNV-1a's per-step 2^40-prime multiply restores uniformity (101/1000
   * at the same rate).
   */
-case class Fnv1aExpr(child: Expression) extends UnaryExpression {
+case class Fnv1aExpr(child: Expression) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -34,20 +33,8 @@ case class Fnv1aExpr(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "fnv1a64"
 
-  override def eval(input: InternalRow): Any =
-    Fnv1aExpr.run(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = Fnv1aExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        long ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value});
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = Fnv1aExpr
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): Fnv1aExpr =
     copy(child = newChild)

@@ -2,11 +2,11 @@ package graft.text
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** The full Gopher/MassiveWeb rule bundle ([[GopherRules]], Rae 2021
   * A1.1) as ONE fused scan: `string → struct<n_words, mean_word_len,
@@ -42,7 +42,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     the Column program applied), hence `nullable = false`.
   */
 case class GopherMetricsExpr(child: Expression, minWords: Int, maxWords: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -55,20 +55,9 @@ case class GopherMetricsExpr(child: Expression, minWords: Int, maxWords: Int)
 
   override def prettyName: String = "gopher_metrics"
 
-  override def eval(input: InternalRow): Any =
-    GopherMetricsExpr.run(child.eval(input).asInstanceOf[UTF8String], minWords, maxWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = GopherMetricsExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $minWords, $maxWords);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = GopherMetricsExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(minWords), Literal(maxWords))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): GopherMetricsExpr =
     copy(child = newChild)

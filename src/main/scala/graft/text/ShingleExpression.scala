@@ -1,13 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for stride-1 shingle keys: tokenizes the
   * string (the `native:plain_words_en` path, lowercase + punct-drop) and
@@ -22,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * dedup tier's hottest scan (every corpus token is hashed k times), so
   * like [[TokenizeExpr]] it earns the custom-Expression escape hatch:
   * one fused pass, tokens materialized once, windows hashed in a tight
-  * loop, `doGenCode` keeping the scan inside whole-stage codegen. */
-case class ShingleKeysExpr(child: Expression, k: Int) extends UnaryExpression {
+  * loop, a static call keeping the scan inside whole-stage codegen. */
+case class ShingleKeysExpr(child: Expression, k: Int) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -39,20 +38,9 @@ case class ShingleKeysExpr(child: Expression, k: Int) extends UnaryExpression {
 
   override def prettyName: String = "shingle_keys"
 
-  override def eval(input: InternalRow): Any =
-    ShingleKeysExpr.run(child.eval(input).asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = ShingleKeysExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $k);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = ShingleKeysExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(k))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): ShingleKeysExpr =
     copy(child = newChild)
@@ -73,7 +61,7 @@ case class ShingleKeysExpr(child: Expression, k: Int) extends UnaryExpression {
   * selected (pos, fp) set is ~2/(w+1) of the shingle stream yet any two
   * documents sharing a run of ≥ `w + k − 1` tokens are GUARANTEED to
   * share a fingerprint — the recall contract plain sampling lacks. */
-case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -89,20 +77,9 @@ case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression
 
   override def prettyName: String = "winnow_fingerprints"
 
-  override def eval(input: InternalRow): Any =
-    WinnowExpr.run(child.eval(input).asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = WinnowExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $k, $w);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = WinnowExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(k), Literal(w))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
     copy(child = newChild)

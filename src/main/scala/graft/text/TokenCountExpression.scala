@@ -1,12 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** `size(tokenize(text))` without the array: counts the plain-words
   * tokens directly from the tokenizer output length, skipping the
@@ -18,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializing path (spec-pinned). Null/`size` semantics follow
   * TokenizeExpr's null contract: null input → 0 tokens, never -1. */
 case class TokenCountExpr(child: Expression, lowercase: Boolean, removePunct: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -31,20 +30,9 @@ case class TokenCountExpr(child: Expression, lowercase: Boolean, removePunct: Bo
 
   override def prettyName: String = "token_count"
 
-  override def eval(input: InternalRow): Any =
-    TokenCountExpr.run(child.eval(input).asInstanceOf[UTF8String], lowercase, removePunct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = TokenCountExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        int ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $lowercase, $removePunct);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = TokenCountExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(lowercase), Literal(removePunct))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): TokenCountExpr =
     copy(child = newChild)

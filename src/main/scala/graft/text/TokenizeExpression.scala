@@ -1,14 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for `native:plain_words_en` tokenization —
   * the engine's hottest operator (it feeds token_frequencies, keyness,
@@ -19,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - no UDF encoder round-trip: the tokenizer writes `UTF8String` /
   *     `InternalRow` directly instead of paying Row↔InternalRow
   *     conversion per row,
-  *   - `doGenCode` emits a static call, so the expression stays inside
-  *     whole-stage codegen instead of splitting the span the way a
+  *   - [[CompanionRun]] makes it a static call, so the expression stays
+  *     inside whole-stage codegen instead of splitting the span the way a
   *     `ScalaUDF` node does,
   *   - the reference null contract (`tokenize(null) → []`,
   *     `src/expressions.rs:834-838`) is encoded as `nullable = false` with
@@ -28,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     guards downstream.
   */
 case class TokenizeExpr(child: Expression, lowercase: Boolean, removePunct: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -41,20 +39,9 @@ case class TokenizeExpr(child: Expression, lowercase: Boolean, removePunct: Bool
 
   override def prettyName: String = "tokenize_plain_words"
 
-  override def eval(input: InternalRow): Any =
-    TokenizeExpr.run(child.eval(input).asInstanceOf[UTF8String], lowercase, removePunct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val helper = TokenizeExpr.getClass.getName // object class: graft.text.TokenizeExpr$
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value}, $lowercase, $removePunct);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = TokenizeExpr
+  override protected def constants: Seq[Expression] = Seq(Literal(lowercase), Literal(removePunct))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): TokenizeExpr =
     copy(child = newChild)

@@ -1,13 +1,12 @@
 package graft.topic
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sql.CompanionRun
 
 /** Native Catalyst expression for document chunking: text →
   * `array<string>` of chunk texts under the greedy
@@ -20,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * embedder registry's executor-singleton tokenizer sizes units (the
   * model resolves inside the helper, never in a closure). */
 case class ChunkTextsExpr(child: Expression, maxTokens: Int, overlap: Int, modelId: String)
-    extends UnaryExpression {
+    extends UnaryExpression with CompanionRun {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -36,23 +35,10 @@ case class ChunkTextsExpr(child: Expression, maxTokens: Int, overlap: Int, model
 
   override def prettyName: String = "chunk_texts"
 
-  override def eval(input: InternalRow): Any =
-    ChunkTextsExpr.run(
-      child.eval(input).asInstanceOf[UTF8String], maxTokens, overlap, modelId)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val mid = ctx.addReferenceObj("modelId", modelId, "java.lang.String")
-    val helper = ChunkTextsExpr.getClass.getName
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $helper.MODULE$$.run(${childGen.isNull} ? null : ${childGen.value},
-            $maxTokens, $overlap, $mid);
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def companion: AnyRef = ChunkTextsExpr
+  override protected def constants: Seq[Expression] = Seq(
+    Literal(maxTokens), Literal(overlap), CompanionRun.obj(modelId, classOf[String]))
+  override protected def nullInNullOut: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): ChunkTextsExpr =
     copy(child = newChild)
