@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.{Bpe, Concordance, TextAnalysis, TextFunctions, Tokenize, TokenFrequencies, TokenizerModels, WordPieceTokenizer}
-import graft.util.Scratch
+import graft.util.{Scratch, Settings}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -91,8 +91,8 @@ object SparkEntry {
     * VOLUME (partitions sized so per-partition state stays ~100–200 MB),
     * never this constant — the knob exists exactly so a deployment sets
     * it from its own state size. */
-  private def StreamStateParts: Int =
-    Integer.getInteger("graft.stream.stateParts", 4).intValue()
+  private[graft] def StreamStateParts: Int =
+    Settings.int("graft.stream.stateParts", sys.props.get("graft.stream.stateParts"), 4)
 
   /** Scratch cache root for the cached-tokenize query — one per JVM so a
     * bench's warmup pass populates what its timed pass reads. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.text.PlainTokenizer
+import graft.util.Settings
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -746,21 +747,10 @@ object Dedup {
     * edge fixtures — the distributed star contraction runs untouched.
     * Ops override: `-Dgraft.cc.driverMaxEdges=N` (0 disables). */
   val DriverCcMaxEdgesDefault: Long = 2000000L
-  private def driverCcMaxEdges: Long = {
-    val v = System.getProperty("graft.cc.driverMaxEdges")
-    if (v == null) DriverCcMaxEdgesDefault
-    else
-      try v.trim.toLong
-      catch {
-        // fail as a config error at the call site, not a bare
-        // NumberFormatException from inside connectedComponents
-        // (ADVICE r21)
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"-Dgraft.cc.driverMaxEdges must be a long edge count " +
-              s"(0 disables the driver fast path); got '$v'")
-      }
-  }
+  private[graft] def driverCcMaxEdges: Long =
+    Settings.parsed("graft.cc.driverMaxEdges", sys.props.get("graft.cc.driverMaxEdges"),
+      DriverCcMaxEdgesDefault, "a long edge count (0 disables the driver fast path)")(
+      _.toLongOption)
 
   /** Exact driver-side union-find over the collected edge rows, labels =
     * min member id per component (the star-contraction fixpoint's exact

@@ -1,6 +1,7 @@
 package graft.embed
 
 import graft.text.WordPieceTokenizer
+import graft.util.Settings
 
 /** Gated REAL-WEIGHTS pure-JVM BERT/MiniLM encoder — closes the last
   * increment of the embedding architecture without ONNX: the forward
@@ -59,8 +60,10 @@ object BertWeightsGate {
     existing(sys.props.get(WeightsPathProp)).orElse(existing(sys.env.get(WeightsPathEnv)))
   def vocabPath: Option[String] =
     existing(sys.props.get(VocabPathProp)).orElse(existing(sys.env.get(VocabPathEnv)))
-  def heads: Int = sys.props.get(HeadsProp).orElse(sys.env.get(HeadsEnv))
-    .flatMap(_.toIntOption).getOrElse(12)
+  def heads: Int = headsFrom(sys.props.get(HeadsProp), sys.env.get(HeadsEnv))
+
+  private[graft] def headsFrom(prop: Option[String], env: Option[String]): Int =
+    if (prop.isDefined) Settings.int(HeadsProp, prop, 12) else Settings.int(HeadsEnv, env, 12)
 
   def available: Boolean = weightsPath.isDefined && vocabPath.isDefined
 

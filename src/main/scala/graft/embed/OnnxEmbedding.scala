@@ -3,6 +3,7 @@ package graft.embed
 import java.util.concurrent.ConcurrentHashMap
 
 import graft.text.WordPieceTokenizer
+import graft.util.Settings
 
 /** Gated REAL-ONNX embedding backend — the drop-in behind
   * [[EmbeddingModel]] the pseudo-embedder has stood in for (reference
@@ -50,7 +51,9 @@ object OnnxRuntimeGate {
 
   def modelPath: Option[String] = existingFile(ModelPathEnv)
   def vocabPath: Option[String] = existingFile(VocabPathEnv)
-  def dim: Int = sys.env.get(DimEnv).flatMap(_.toIntOption).getOrElse(DefaultDim)
+  def dim: Int = dimFrom(sys.env.get(DimEnv))
+
+  private[graft] def dimFrom(env: Option[String]): Int = Settings.int(DimEnv, env, DefaultDim)
 
   def available: Boolean = runtimePresent && modelPath.isDefined && vocabPath.isDefined
 
