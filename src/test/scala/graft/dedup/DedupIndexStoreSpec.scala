@@ -276,13 +276,14 @@ class DedupIndexStoreSpec extends SparkSpec {
     val path = tmp("dedupidx-delplan")
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), path)
     DedupIndexStore.deleteFromDedupIndex(Seq(1L).toDF("doc_id"), path)
-    val plan = DedupIndexStore
+    val probe = DedupIndexStore
       .probeDedupIndex(docs.filter($"doc_id" % 3 === 0), path, "text", "doc_id",
         threshold = Thresh)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val plan = probe.toString
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"probe must never shuffle a join side:\n$plan")
-    assert("FileScan parquet[^\\n]*tombstones".r.findAllIn(plan).length == 1,
+    assert(graft.ScanPaths.count(probe, "tombstones") == 1,
       s"tombstones/ must scan once:\n$plan")
   }
 
@@ -291,15 +292,15 @@ class DedupIndexStoreSpec extends SparkSpec {
     buildCfg(docs.filter($"doc_id" % 3 =!= 0), path)
     // string form of the static physical plan — the AQE wrapper hides
     // operator nodes from collect() (same posture as PlanShapeSpec)
-    val plan = DedupIndexStore
+    val probe = DedupIndexStore
       .probeDedupIndex(docs.filter($"doc_id" % 3 === 0), path, "text", "doc_id",
         threshold = Thresh)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val plan = probe.toString
 
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"probe must never shuffle a join side:\n$plan")
-    def scanCount(artifact: String) =
-      s"FileScan parquet[^\\n]*$artifact".r.findAllIn(plan).length
+    def scanCount(artifact: String) = graft.ScanPaths.count(probe, artifact)
     assert(scanCount("bands") == 1, s"bands/ must scan once:\n$plan")
     assert(scanCount("signatures") == 1, s"signatures/ must scan once:\n$plan")
   }

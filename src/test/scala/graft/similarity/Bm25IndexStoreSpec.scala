@@ -65,7 +65,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
     val plan =
       try {
         Bm25IndexStore.serveBm25TopK(spark, dir, Terms, k = 10, roundTo = 6)
-        Bm25IndexStore.ServeProbe.lastPrunedPostingsPlan
+        Bm25IndexStore.ServeProbe.lastPrunedPostingsPlan.toString
       } finally Bm25IndexStore.ServeProbe.capturePlans.set(false)
     // static partition pruning: the bucket literals land in the scan's
     // PartitionFilters, and the token IN filter pushes to parquet
@@ -244,9 +244,9 @@ class Bm25IndexStoreSpec extends SparkSpec {
   test("batched serve scans postings a constant number of times and prunes statically") {
     import spark.implicits._
     val dir = newIndex(docs)
-    def planOf(batch: org.apache.spark.sql.DataFrame): String =
+    def planOf(batch: org.apache.spark.sql.DataFrame) =
       Bm25IndexStore.serveBm25TopKBatch(batch, dir, k = 10, roundTo = 6)
-        .queryExecution.executedPlan.toString
+        .queryExecution.executedPlan
     val small = Seq((1L, Seq("spark", "join"))).toDF("query_id", "terms")
     val large = Seq(
       (1L, Seq("spark", "join")), (2L, Seq("scan", "filter")),
@@ -254,11 +254,11 @@ class Bm25IndexStoreSpec extends SparkSpec {
       (5L, Seq("hash", "stream")), (6L, Seq("vector", "value")),
       (7L, Seq("table", "query")), (8L, Seq("order", "group"))
     ).toDF("query_id", "terms")
-    // anchored on the path segment (optionally version-suffixed), so
-    // 'postings_deltas' or an attribute merely containing the word can
-    // never satisfy (or inflate) the constant-scan assertion
-    def postingsScans(plan: String): Int =
-      """/postings(__v\d+)?(?![\w-])""".r.findAllIn(plan).length
+    // scans whose path has a 'postings' (or versioned 'postings__vN')
+    // directory, so 'postings_deltas' or an attribute merely containing
+    // the word can never satisfy (or inflate) the constant-scan assertion
+    def postingsScans(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+      graft.ScanPaths.count(plan, "postings")
     // round 22 (one-scan contract): the df aggregate materializes the
     // pruned postings scan into lazy-checkpoint blocks, so the FINAL
     // scoring plan contains ZERO postings file scans for any batch size
@@ -273,8 +273,8 @@ class Bm25IndexStoreSpec extends SparkSpec {
       // the one postings scan (pre-checkpoint) is statically bucket-pruned
       val pruned = Bm25IndexStore.ServeProbe.lastPrunedPostingsPlan
       assert(postingsScans(pruned) == 1, pruned)
-      assert(pruned.contains("PartitionFilters: [") && pruned.contains("tok_bucket"),
-        pruned)
+      assert(pruned.toString.contains("PartitionFilters: [") &&
+        pruned.toString.contains("tok_bucket"), pruned)
     } finally Bm25IndexStore.ServeProbe.capturePlans.set(false)
   }
 

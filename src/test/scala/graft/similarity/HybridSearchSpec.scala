@@ -182,12 +182,12 @@ class HybridSearchSpec extends SparkSpec {
   test("served batch plan reads each index a constant number of times") {
     import spark.implicits._
     val (bm25Dir, annDir) = servedFixture()
-    def planOf(qs: org.apache.spark.sql.DataFrame): String =
+    def planOf(qs: org.apache.spark.sql.DataFrame) =
       HybridSearch.rrfServedBatch(qs, bm25Dir, annDir, BatchModelId,
           k = 8, poolK = 5, nProbe = 2)
-        .queryExecution.executedPlan.toString
-    def scans(plan: String, segment: String): Int =
-      s"""/$segment(__v\\d+)?(?![\\w-])""".r.findAllIn(plan).length
+        .queryExecution.executedPlan
+    def scans(plan: org.apache.spark.sql.execution.SparkPlan, artifact: String): Int =
+      graft.ScanPaths.count(plan, artifact)
     val one = planOf(batchQueries.limit(1))
     val three = planOf(batchQueries)
     // ONE lexical plan + ONE semantic plan total, however many queries:
