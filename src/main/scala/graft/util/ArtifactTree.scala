@@ -118,7 +118,11 @@ object ArtifactTree {
     * compaction cycles of one subdir AND older than `graceMinAgeMs`
     * can still lose its tree — the window is now two knobs wide
     * instead of exactly one cycle. Disk overhead is bounded by
-    * `1 + retained versions` copies of the tree. */
+    * `1 + retained versions` copies of the tree. `sortWithin` sorts each
+    * output file by those columns (a dictionary keyed by them keeps
+    * narrow row-group statistics). Returns the rewritten rows (the
+    * transform's output), for a caller that derives a second artifact
+    * from exactly what was published. */
   def compact(
       spark: SparkSession,
       root: String,
@@ -127,7 +131,8 @@ object ArtifactTree {
       transform: DataFrame => DataFrame = identity,
       partitionCols: Seq[String] = Nil,
       graceVersions: Int = 1,
-      graceMinAgeMs: Long = 0L): Unit = {
+      graceMinAgeMs: Long = 0L,
+      sortWithin: Seq[String] = Nil): DataFrame = {
     require(graceVersions >= 1,
       s"compact: graceVersions must be >= 1 (got $graceVersions) — GCing the " +
         "just-superseded version would break the reader-during-swap contract")
@@ -157,11 +162,15 @@ object ArtifactTree {
     val rewritten = transform(source)
     val newV = curV + 1
     val newTree = versionedTree(hp, subdir, newV)
-    val writer =
-      if (partitionCols.isEmpty) rewritten.repartition(targetFiles).write
+    val clustered =
+      if (partitionCols.isEmpty) rewritten.repartition(targetFiles)
       else rewritten
         .repartition(targetFiles, partitionCols.map(org.apache.spark.sql.functions.col): _*)
-        .write.partitionBy(partitionCols: _*)
+    val sorted =
+      if (sortWithin.isEmpty) clustered
+      else clustered.sortWithinPartitions(sortWithin.map(org.apache.spark.sql.functions.col): _*)
+    val writer =
+      if (partitionCols.isEmpty) sorted.write else sorted.write.partitionBy(partitionCols: _*)
     // overwrite: an orphan __v<newV> from a crashed run (no marker, so
     // current version never advanced) is rewritten in place
     writer.mode("overwrite").parquet(newTree.toString)
@@ -191,6 +200,7 @@ object ArtifactTree {
       }
     if (gcCeiling >= 0 && fs.exists(plain) && oldEnough(plain))
       fs.delete(plain, true) // legacy tree ("version 0"), past its grace
+    rewritten
   }
 
   /** Whether an artifact subtree exists (absent ⇒ callers skip its scan

@@ -475,6 +475,90 @@ class Bm25IndexStoreSpec extends SparkSpec {
     assert(serve(dir) == serve(newIndex(kept)), "served == rebuild after the compaction")
   }
 
+  /** Which path each per-call serve in `body` took for df(t):
+    * (term-dictionary reads, distinct-doc counts over the postings). */
+  private def dfRoutes(body: => Unit): (Long, Long) = {
+    val p = Bm25IndexStore.ServeProbe
+    val (d0, c0) = (p.dictionaryReads.get(), p.dfCounts.get())
+    body
+    (p.dictionaryReads.get() - d0, p.dfCounts.get() - c0)
+  }
+
+  private val Queries = Seq(1L -> Terms, 2L -> Seq("scan", "filter"), 3L -> Seq("sort", "zzz_nope"))
+
+  test("term dictionary: a legacy store without df/ counts df, and compaction builds it") {
+    val dir = newIndex(docs)
+    graft.util.ArtifactTree.remove(spark, dir, "df")
+    var rows: Seq[(Long, Long, Double)] = Nil
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((0L, 3L)),
+      "a store without a dictionary must take the distinct-count path")
+    assert(rows == oracle(docs, Queries))
+    Bm25IndexStore.compactBm25Index(spark, dir, targetFiles = 2)
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((3L, 0L)),
+      "compaction must build a dictionary the serve trusts")
+    assert(rows == oracle(docs, Queries))
+  }
+
+  test("term dictionary: postings published but the dictionary not yet -> exact fallback") {
+    val dir = newIndex(docs)
+    assert(dfRoutes(perCallRows(dir, Queries)) == ((3L, 0L)), "a fresh build serves df from df/")
+    // the compaction half-state: a new postings version is published and
+    // the dictionary still names the old one
+    graft.util.ArtifactTree.compact(spark, dir, "postings", 2, partitionCols = Seq("tok_bucket"))
+    var rows: Seq[(Long, Long, Double)] = Nil
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((0L, 3L)),
+      "a dictionary stamped with a superseded postings version must not serve")
+    assert(rows == oracle(docs, Queries))
+    Bm25IndexStore.compactBm25Index(spark, dir, targetFiles = 2)
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((3L, 0L)))
+    assert(rows == oracle(docs, Queries))
+  }
+
+  test("term dictionary: an append missing its df delta falls back; the same-batchId retry heals it") {
+    val dir = newIndex(docs.filter(col("doc_id") % 2 === 0))
+    Bm25IndexStore.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0), dir, batchId = "crash")
+    // what a crash between the postings delta and the df delta leaves for
+    // the dictionary: postings_deltas/append-crash with no df counterpart
+    new java.io.File(graft.util.ArtifactTree.resolve(spark, dir, "df"), "append-crash")
+      .listFiles().foreach(_.delete())
+    var rows: Seq[(Long, Long, Double)] = Nil
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((0L, 3L)),
+      "postings deltas without matching dictionary deltas must not serve from df/")
+    assert(rows == oracle(docs, Queries))
+    Bm25IndexStore.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0), dir, batchId = "crash")
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((3L, 0L)),
+      "the retried append must leave a dictionary the serve trusts")
+    assert(rows == oracle(docs, Queries))
+    assert(batchRows(dir, Queries) == oracle(docs, Queries))
+  }
+
+  test("term dictionary: a replayed stream batch rewrites its df delta and serves exactly") {
+    val dir = newIndex(docs.filter(col("doc_id") % 2 === 0))
+    val drop = graft.util.Scratch.dir("bm25-df-drop").toString
+    for (slice <- 0 until 2)
+      docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") % 4 === (1 + 2 * slice))
+        .coalesce(1).write.mode("overwrite").parquet(s"$drop/slice$slice")
+    val ckpt = graft.util.Scratch.dir("bm25-df-ckpt").toString
+    def ingest() = {
+      val q = Bm25IndexStore.streamAppendToBm25Index(
+        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$drop/*"), dir, ckpt, "text", "doc_id")
+      try q.awaitTermination() finally q.stop()
+    }
+    ingest()
+    // batch 1 crashed after its postings delta: no df delta, no commit
+    new java.io.File(graft.util.ArtifactTree.resolve(spark, dir, "df"), "delta-1")
+      .listFiles().foreach(_.delete())
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+    var rows: Seq[(Long, Long, Double)] = Nil
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((0L, 3L)))
+    assert(rows == oracle(docs, Queries))
+    ingest() // the restart replays batch 1 under the same batch id
+    assert(new java.io.File(s"$ckpt/commits/1").exists(), "batch 1 must be replayed")
+    assert(dfRoutes { rows = perCallRows(dir, Queries) } == ((3L, 0L)))
+    assert(rows == oracle(docs, Queries))
+  }
+
   test("bucket routing: driver-side bucketOf matches the engine's column expression") {
     import spark.implicits._
     val toks = Seq("spark", "join", "window", "the", "zebra").toDF("token")

@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** The serve's fixed cost scales with the query, not with the index: a
   * warm serve runs the same number of Spark jobs whether the index has
-  * 16 or 256 posting buckets (no tree-sized file-listing job), and the
+  * 16 or 256 posting buckets (no tree-sized file-listing job), its
+  * generated code does not depend on the query's idf values, and the
   * per-file-state metadata memo stays bounded while one store goes
   * through many append → serve → delete → compact cycles. */
 class Bm25ServeBudgetSpec extends SparkSpec {
@@ -49,7 +50,7 @@ class Bm25ServeBudgetSpec extends SparkSpec {
 
   private val Terms = Seq("w3", "w50", "w101")
 
-  test("warm serve job counts do not depend on n_buckets; per-call serve runs <= 6 jobs") {
+  test("warm serve job counts do not depend on n_buckets; per-call serve runs <= 3 jobs") {
     import spark.implicits._
     val batch = Seq((1L, Seq("w3", "w50")), (2L, Seq("w101", "w7", "common")))
       .toDF("query_id", "terms")
@@ -66,7 +67,22 @@ class Bm25ServeBudgetSpec extends SparkSpec {
       s"batched $batch16 / $batch256 (nBuckets 16 / 256)")
     assert(perCall16 == perCall256, "a per-call serve's job count must not grow with n_buckets")
     assert(batch16 == batch256, "a batched serve's job count must not grow with n_buckets")
-    assert(perCall16 <= 6, s"per-call serve ran $perCall16 jobs")
+    assert(perCall16 <= 3, s"per-call serve ran $perCall16 jobs")
+  }
+
+  test("warm per-call serves with fresh terms compile no new classes") {
+    val dir = newIndex(corpus, 16)
+    def serve(terms: Seq[String]) =
+      Bm25IndexStore.serveBm25TopK(spark, dir, terms, k = 10, roundTo = 6).collect()
+    serve(Terms); serve(Seq("w8", "w77", "w140")) // warm: the plan shape compiles once
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    // same term count, fresh terms: per-query idf values differ every call
+    for (i <- 0 until 5) serve(Seq(s"w${20 + i}", s"w${120 + i}", s"w${220 + i}"))
+    val added = compiles.getCount - before
+    info(s"codegen compiles over 5 warm serves with fresh terms: $added")
+    assert(added == 0, s"warm serves compiled $added new classes")
   }
 
   test("20 append -> serve -> delete -> compact cycles leave the metadata memo flat") {
