@@ -75,7 +75,7 @@ object AB {
           val mean = d.sum / d.length
           val sd = math.sqrt(d.map(x => (x - mean) * (x - mean)).sum / math.max(1, d.length - 1))
           val ci = 2.0 * sd / math.sqrt(d.length.toDouble)
-          f"$mean%+.3f ± $ci%.3f s (n=${d.length})"
+          f"$mean%+.3f +/- $ci%.3f s (n=${d.length})"
         }
       }
       val pairs = 0 until passes

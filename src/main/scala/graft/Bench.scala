@@ -117,7 +117,7 @@ object Bench {
         }
       } catch { case _: Throwable => Map.empty }
     if (baseline.isEmpty)
-      System.err.println(s"[bench] no baseline medians at $baselinePath — outlier re-runs disabled")
+      System.err.println(s"[bench] no baseline medians at $baselinePath - outlier re-runs disabled")
     val outliers = scala.collection.mutable.ArrayBuffer.empty[String]
     // Median of `passes` timed runs per query: single-run walltimes on a
     // busy box swing ±70% (BENCH_r05 read 1.7× a clean run), which makes
