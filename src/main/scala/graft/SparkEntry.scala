@@ -633,7 +633,7 @@ object SparkEntry {
   /** Fixture plumbing: clone an index's artifact tree so a lifecycle
     * variant (delete, compact) starts from the SAME base artifacts
     * without re-signing/re-encoding the corpus — exactly the production
-    * posture (a takedown never rebuilds), and one corpus-sized build
+    * posture (a takedown never re-indexes the corpus), and one corpus-sized build
     * instead of three across the lifecycle fixtures. */
   private def copyTree(src: String, dst: String): Unit = {
     val s = java.nio.file.Paths.get(src)

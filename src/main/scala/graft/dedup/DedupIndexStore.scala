@@ -225,9 +225,9 @@ object DedupIndexStore {
       case None => identity
       case Some(t) => df => df.join(t.select(col("id")), Seq("id"), "left_anti")
     }
-    graft.util.ArtifactTree.compact(spark, path, "signatures", targetFiles, drop,
+    graft.util.ArtifactTree.compact(spark, path, "signatures", targetFiles, src => drop(src),
       graceVersions = graceVersions, graceMinAgeMs = graceMinAgeMs)
-    graft.util.ArtifactTree.compact(spark, path, "bands", targetFiles, drop,
+    graft.util.ArtifactTree.compact(spark, path, "bands", targetFiles, src => drop(src),
       graceVersions = graceVersions, graceMinAgeMs = graceMinAgeMs)
     graft.util.ArtifactTree.remove(spark, path, "tombstones")
   }

@@ -40,7 +40,7 @@ import graft.text.Tokenize
   *     tree it describes (an empty `_postings-<tree>` file). Appends and
   *     stream batches nest a delta inside the resolved `df` tree under
   *     their postings delta's name (`append-<id>`, `delta-<batchId>`);
-  *     [[compactBm25Index]] rebuilds it from the published postings
+  *     [[compactBm25Index]] re-derives it from the published postings
   *     through [[graft.util.ArtifactTree.compact]]. A serve reads df(t)
   *     from it only when the stamp names `ArtifactTree.resolve(postings)`
   *     and its committed delta names equal the `postings_deltas` names,
@@ -485,10 +485,6 @@ object Bm25IndexStore {
       .collect().map(r => r.getAs[String]("token") -> r.getAs[Long]("df")).toMap
   }
 
-  /** The distinct non-null terms of a batch's `(query_id, token)` rows. */
-  private def vocabulary(qterms: DataFrame): Seq[String] =
-    qterms.select("token").distinct().collect().toSeq.flatMap(r => Option(r.getString(0)))
-
   /** `pruneDf` sentinel (round 19): derive the MaxScore threshold from
     * the index's own persisted stats — `max(1, nDocs/10)`, the
     * measured-good value from the r18 Zipf study (SCALING.md). The r18
@@ -658,24 +654,15 @@ object Bm25IndexStore {
     * honored exactly like the per-call path (anti-join after the pruned
     * scan, constants net of tombstones).
     *
-    * `queries` is evaluated MORE THAN ONCE (the bucket-literal
-    * aggregate, the term-set broadcast, the scoring join): a caller
-    * whose query table rides an expensive derivation (tokenize, a
-    * remote read) should persist it first — the same no-cache-residue
-    * rule documented on `probeDedupIndex`. (When the MaxScore routing
-    * actually ENGAGES — some query holds both a hot and an essential
-    * term — a frame [[planIsDeterministic]] cannot prove row-set-stable
-    * is localCheckpointed and the term set, the pruned postings view,
-    * and the df/idf stats are REBUILT from the checkpointed frame
-    * (rounds 20–21, ADVICE r19/r20): the routing consumes the frame
-    * from the driver and the proof admits a pruned result, so the
-    * engaged path must be ONE evaluation end to end — artifacts from a
-    * different evaluation of an unstable caller plan could drop an
-    * essential term's partials yet still pass the proof. Row-set-stable
-    * frames reuse the trigger evaluation's artifacts with NO checkpoint
-    * job (round 21, VERDICT r20 #3), and batches with nothing to prune
-    * never pay routing at all — the default path stays byte-identical
-    * to the pre-pruning serve, spec-pinned via [[ServeProbe]].)
+    * `queries` is read ONCE, by construction: its distinct
+    * `(query_id, token)` rows ride a lazy checkpoint that the
+    * vocabulary collect fills, and every later consumer (the scoring
+    * broadcast, the MaxScore routing's collect and filters, the
+    * fallback) reads those rows. A frame that would present different
+    * rows to a second evaluation (a UDF declared deterministic that is
+    * not, a source that moves) is served as that one read on every
+    * route — the vocabulary, the pruned postings and the scoring join
+    * can never disagree.
     *
     * `pruneDf` — EXACT MaxScore pruning for stopword-class terms
     * (Turtle & Flood 1995, "Query evaluation: strategies and
@@ -725,24 +712,22 @@ object Bm25IndexStore {
     val m = readMeta(spark, path)
     val tomb = tombstones(spark, path)
 
-    // The query frame is checkpointed ONLY where the MaxScore routing
-    // actually engages (below): the routing consumes the frame from the
-    // DRIVER and re-serves a filtered view of it through the fallback,
-    // so one evaluation is a correctness requirement THERE — while on
-    // the common path (no stopword-class term in the batch, or nothing
-    // prunable) the plan stays byte-identical to the pre-pruning serve,
-    // paying neither a checkpoint job nor a (query, term) collect. With
-    // pruning defaulted on (PruneDfAuto) that common path IS the
-    // default path, so its cost matters.
+    // ONE read of the caller's frame: the distinct (query, term) rows
+    // (≤ |batch| scale) ride a lazy checkpoint that the vocabulary
+    // collect below fills, and every later consumer reads its blocks,
+    // so no route can see rows another route did not (disk-backed,
+    // freed with the RDD by the ContextCleaner)
     val qterms = queries
       .select(col(queryIdCol).as("query_id"), explode(col(termsCol)).as("token"))
       .distinct()
+      .localCheckpoint(false)
 
     // the batch vocabulary to the driver (≤ |batch vocabulary| rows, the
     // same bounded class as the df rows below): the bucket literals for
     // static pruning (≤ n_buckets values however large the batch is)
     // and the term-dictionary lookup both derive from it
-    val vocab = vocabulary(qterms)
+    val vocab = qterms.select("token").distinct().collect().toSeq
+      .flatMap(r => Option(r.getString(0)))
     val buckets = vocab.map(bucketOf(_, m.nBuckets)).distinct
     // zero-rows shell with the caller's query-id type AND the index's
     // doc-id type (the postings artifact's memoized schema — no bucket
@@ -785,7 +770,7 @@ object Bm25IndexStore {
     // broadcast
     val dfRows = dictionaryDf(spark, path, vocab, tomb).getOrElse(countDf(hits)).toSeq
     if (dfRows.isEmpty) return emptyResult
-    val idfRows = dfRows.map { case (t, df) => (t, idfOf(nDocs, df)) }.toSeq
+    val idfRows = dfRows.map { case (t, df) => (t, idfOf(nDocs, df)) }
     val idfDf = idfRows.toDF("token", "idf")
 
     // the per-call partial with idf as a joined column instead of a
@@ -815,127 +800,59 @@ object Bm25IndexStore {
         .filter(col("__rn") <= k)
         .drop("__rn")
     }
-    def fullScored: DataFrame = hits
+    // the unpruned scoring join for the query rows `qt`: the whole batch,
+    // or the failed-proof fallback's subset — df(t) depends only on the
+    // token and the tombstone set, and the per-query fold and window
+    // never see other queries' rows, so per query the restricted join is
+    // bitwise the whole batch's
+    def fullScored(qt: DataFrame): DataFrame = hits
       .join(broadcast(idfDf), Seq("token"))
-      .join(broadcast(qterms), Seq("token"))
-      .select(col("query_id"), col("doc_id"), col("token"), partial.as("partial"))
-
-    val hotTokens0 = dfRows.collect { case (t, df) if df > effPrune => t }.toSet
-    if (hotTokens0.isEmpty) return scoreAndCut(fullScored)
-    // vocabulary-level skip (round 19): if every batch term PRESENT in
-    // the index is hot, no query can hold an essential term with df ≥ 1,
-    // so the per-query filter below would reject the whole batch —
-    // return the unpruned plan without paying the routing's checkpoint
-    // job or its (query, term) collect. This is the shape of the oracle
-    // fixtures' common-word batches under the auto default.
-    if (hotTokens0.size == dfRows.length) return scoreAndCut(fullScored)
-
-    // ---- MaxScore routing (see the scaladoc's exactness proof) ----
-    // The guards above routed on a FIRST evaluation of `queries`; a
-    // NONDETERMINISTIC caller frame could present different rows to a
-    // later evaluation, and a token visible only to the second
-    // evaluation would be missing from the first evaluation's
-    // term-set-filtered postings — its essential partials silently
-    // absent from phase 1, yet the proof could still pass (ADVICE r19).
-    // A frame the hardened gate proves row-set-stable (expression
-    // determinism PLUS no Deduplicate-on-subset / Sample / Limit /
-    // order-dependent aggregate — ADVICE r20) reuses the trigger
-    // evaluation's artifacts directly, paying neither a checkpoint job
-    // nor a second postings aggregation (round 21, VERDICT r20 #3) —
-    // the artifacts are all set-valued: distinct buckets, distinct
-    // tokens, distinct-doc df counts. Any other frame localCheckpoints
-    // the caller's plan and REBUILDS bucket literals, term set, hits,
-    // and df/idf from the checkpointed frame, making the engaged path
-    // one evaluation end to end for exactly the frames where the first
-    // evaluation is untrustworthy.
-    // Round 21 (VERDICT r20 #3): a DETERMINISTIC frame re-evaluates to
-    // the same row set (planIsDeterministic, hardened per ADVICE r20),
-    // so the engaged path routes WITHOUT the eager localCheckpoint —
-    // the trigger evaluation's artifacts are already this evaluation's,
-    // and the routing's remaining consumers (the (query,term) collect,
-    // essQ/hotQ, the fallback filter) re-read the caller's plan under
-    // the same re-evaluation contract the common path documents. Only a
-    // frame the gate cannot prove row-set-stable pays the checkpoint
-    // job, and then rebuilds every artifact from the checkpointed frame
-    // (one evaluation end to end — ADVICE r19).
-    val callerDeterministic = planIsDeterministic(queries)
-    val qtermsC =
-      if (callerDeterministic) qterms
-      else {
-        ServeProbe.routingCheckpoints.incrementAndGet()
-        queries.localCheckpoint(true)
-          .select(col(queryIdCol).as("query_id"), explode(col(termsCol)).as("token"))
-          .distinct()
-      }
-    val (hitsC, dfRowsC) =
-      if (callerDeterministic) (hits, dfRows)
-      else {
-        ServeProbe.rebuilds.incrementAndGet()
-        val vocabC = vocabulary(qtermsC)
-        val bucketsC = vocabC.map(bucketOf(_, m.nBuckets)).distinct
-        if (bucketsC.isEmpty) return emptyResult
-        val hitC0 = readPostings(spark, path, bucketsC)
-          .filter(col("tok_bucket").isin(bucketsC.map(Integer.valueOf): _*) &&
-            col("token").isin(vocabC: _*))
-        // same one-scan discipline as the common path: every consumer of
-        // the rebuilt scan reads its checkpoint blocks
-        val h0 = tomb.fold(hitC0)(t => hitC0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        val h = h0.localCheckpoint(false)
-        (h, dictionaryDf(spark, path, vocabC, tomb).getOrElse(countDf(h)).toSeq)
-      }
-    if (dfRowsC.isEmpty) return emptyResult
-    val idfRowsC = dfRowsC.map { case (t, df) => (t, idfOf(nDocs, df)) }.toSeq
-    val idfDfC = idfRowsC.toDF("token", "idf")
-    val idfMap = idfRowsC.toMap
-    val dfMap = dfRowsC.toMap
-    val hotTokens = dfRowsC.collect { case (t, df) if df > effPrune => t }.toSet
-    // the unpruned tail over the checkpointed frame's own artifacts —
-    // also the failed-proof fallback's scoring plan (round 20: the
-    // fallback reuses the batch's already-collected df/idf and the
-    // rebuilt hits instead of recursing into a full second serve; df(t)
-    // depends only on the token and the tombstone set, never on which
-    // other queries share the batch, so the restricted join is bitwise
-    // the recursion it replaces)
-    def fullScoredC(qt: DataFrame): DataFrame = hitsC
-      .join(broadcast(idfDfC), Seq("token"))
       .join(broadcast(qt), Seq("token"))
       .select(col("query_id"), col("doc_id"), col("token"), partial.as("partial"))
-    // re-check the vocabulary guards on THIS evaluation (they were
-    // decided on the trigger evaluation above)
-    if (hotTokens.isEmpty || hotTokens.size == dfRowsC.length)
-      return scoreAndCut(fullScoredC(qtermsC))
+
+    // vocabulary-level skips: with no hot term there is nothing to
+    // prune, and if every batch term PRESENT in the index is hot (round
+    // 19) no query can hold an essential term with df ≥ 1 — either way
+    // the unpruned plan, without the routing's (query, term) collect.
+    // The all-hot case is the shape of the oracle fixtures' common-word
+    // batches under the auto default.
+    val hotTokens = dfRows.collect { case (t, df) if df > effPrune => t }.toSet
+    if (hotTokens.isEmpty || hotTokens.size == dfRows.length)
+      return scoreAndCut(fullScored(qterms))
+
+    // ---- MaxScore routing (see the scaladoc's exactness proof) ----
     // (query, term) pairs to the driver: query-proportional, the same
     // bounded class as the bucket and df collects above
     ServeProbe.queryTermCollects.incrementAndGet()
-    val byQuery = qtermsC.collect()
+    val byQuery = qterms.collect()
       .map(r => (r.get(0), r.getString(1)))
       .groupBy(_._1).map { case (qid, rows) => qid -> rows.map(_._2).toSeq }
+    val idfMap = idfRows.toMap
+    val dfMap = dfRows.toMap
     // a query routes through the pruned path only when the proof CAN
     // succeed: it needs a hot term to prune, an essential term to
     // generate candidates, and candidates can reach k at all —
     // Σ df(essential) bounds the candidate count, so below k the n==k
     // check is doomed and the phase-1 plan would be paid for nothing
-    // (the all-hot batch then skips routing entirely: one driver map,
-    // zero extra plans over the unpruned serve)
     val pruneQs = byQuery.filter { case (_, ts) =>
       ts.exists(hotTokens) && ts.exists(t => !hotTokens(t)) &&
         ts.filterNot(hotTokens).map(t => dfMap.getOrElse(t, 0L)).sum >= k
     }
-    if (pruneQs.isEmpty) return scoreAndCut(fullScoredC(qtermsC))
+    if (pruneQs.isEmpty) return scoreAndCut(fullScored(qterms))
     // per-query upper bound on what its pruned terms can add to ANY
     // doc: tf·(k1+1)/(tf + K) < k1+1 strictly for finite tf and K > 0
     val ubSum: Map[Any, Double] = pruneQs.map { case (qid, ts) =>
       qid -> ts.filter(hotTokens).map(t => idfMap.getOrElse(t, 0.0) * (k1 + 1.0)).sum }
 
     val pruneIdFilter = col("query_id").isin(pruneQs.keysIterator.toSeq: _*)
-    val essQ = qtermsC.filter(pruneIdFilter && !col("token").isin(hotTokens.toSeq: _*))
-    val hotQ = qtermsC.filter(pruneIdFilter && col("token").isin(hotTokens.toSeq: _*))
+    val essQ = qterms.filter(pruneIdFilter && !col("token").isin(hotTokens.toSeq: _*))
+    val hotQ = qterms.filter(pruneIdFilter && col("token").isin(hotTokens.toSeq: _*))
 
     // candidates: docs matching >= 1 essential term — Σ df(essential)
     // rows, the whole point of the cut; eager checkpoint because three
     // subtrees consume it
-    val essScored = hitsC
-      .join(broadcast(idfDfC), Seq("token"))
+    val essScored = hits
+      .join(broadcast(idfDf), Seq("token"))
       .join(broadcast(essQ), Seq("token"))
       .select(col("query_id"), col("doc_id"), col("token"), partial.as("partial"))
       .localCheckpoint(true)
@@ -944,10 +861,10 @@ object Bm25IndexStore {
     // the pruned terms' partials for candidate docs ONLY: the hot
     // posting list shrinks through a doc-keyed semi-join BEFORE it ever
     // meets the query table — df(hot)·|queries| rows never materialize
-    val hotScored = hitsC
+    val hotScored = hits
       .filter(col("token").isin(hotTokens.toSeq: _*))
       .join(candDocs, Seq("doc_id"), "left_semi")
-      .join(broadcast(idfDfC), Seq("token"))
+      .join(broadcast(idfDf), Seq("token"))
       .join(broadcast(hotQ), Seq("token"))
       .join(candPairs, Seq("query_id", "doc_id"), "left_semi")
       .select(col("query_id"), col("doc_id"), col("token"), partial.as("partial"))
@@ -967,35 +884,26 @@ object Bm25IndexStore {
       if (passing.isEmpty) phase1.limit(0)
       else phase1.filter(col("query_id").isin(passing.toSeq: _*))
     // everything else — plain queries, failed proofs, all-hot queries —
-    // takes the unpruned plan over the SAME rebuilt artifacts: no
-    // recursion, no second postings df aggregation, no second driver
-    // collect (round 20 — the r19 recursion paid a complete second
-    // serve, ~2× the unpruned plan, for a failed proof). Per query the
-    // restricted join is bitwise the full re-serve it replaces: df/idf
-    // are per-token constants and the per-query fold and window never
-    // see other queries' rows.
+    // takes the unpruned plan over the SAME artifacts: no recursion, no
+    // second postings read, no second driver collect
     val fbIds = byQuery.keySet -- passing
     if (fbIds.isEmpty) served
     else {
       ServeProbe.fallbackUnions.incrementAndGet()
       served.unionByName(scoreAndCut(
-        fullScoredC(qtermsC.filter(col("query_id").isin(fbIds.toSeq: _*)))))
+        fullScored(qterms.filter(col("query_id").isin(fbIds.toSeq: _*)))))
     }
   }
 
   /** Test instrumentation for the serve plan-shape contract (round 20,
-    * spec-pinned): per-JVM counters at the batched serve's expensive
-    * routing sites, so a spec can assert the no-hot / all-hot guards
-    * keep the checkpoint job and the (query, term) collect off the
-    * common path, that an engaged batch checkpoints the query frame
-    * exactly once, and that a failed proof unions the reuse tail rather
-    * than recursing. Monotonic counters (specs diff snapshots); not part
-    * of the serving contract. */
+    * spec-pinned): per-JVM counters at the batched serve's routing
+    * sites, so a spec can assert the no-hot / all-hot guards keep the
+    * (query, term) collect off the common path and that a failed proof
+    * unions the reuse tail rather than recursing. Monotonic counters
+    * (specs diff snapshots); not part of the serving contract. */
   private[graft] object ServeProbe {
-    val routingCheckpoints = new java.util.concurrent.atomic.AtomicLong(0L)
     val queryTermCollects = new java.util.concurrent.atomic.AtomicLong(0L)
     val fallbackUnions = new java.util.concurrent.atomic.AtomicLong(0L)
-    val rebuilds = new java.util.concurrent.atomic.AtomicLong(0L)
     /** Round 22: the serves' pruned postings scan may ride a lazy
       * localCheckpoint, so the FINAL plan can show block reads, not the
       * parquet scan — specs asserting static bucket pruning flip this on
@@ -1003,108 +911,11 @@ object Bm25IndexStore {
       * off: zero cost on the serving path. */
     val capturePlans = new java.util.concurrent.atomic.AtomicBoolean(false)
     @volatile var lastPrunedPostingsPlan: org.apache.spark.sql.execution.SparkPlan = null
-    def snapshot(): (Long, Long, Long, Long) =
-      (routingCheckpoints.get(), queryTermCollects.get(), fallbackUnions.get(),
-        rebuilds.get())
+    def snapshot(): (Long, Long) = (queryTermCollects.get(), fallbackUnions.get())
     /** Which path served df(t): the term dictionary, or the exact
       * distinct-doc count over the pruned postings scan. */
     val dictionaryReads = new java.util.concurrent.atomic.AtomicLong(0L)
     val dfCounts = new java.util.concurrent.atomic.AtomicLong(0L)
-  }
-
-  /** Best-effort row-set-stability gate for the engaged MaxScore path:
-    * true only when the frame's analyzed plan carries (a) no
-    * nondeterministic expression (Catalyst's own legality flag, with
-    * subquery expressions conservatively nondeterministic — their
-    * nested plan is not walked by the expression traversal), (b) no
-    * row-set-unstable NODE (round 21, ADVICE r20: `Deduplicate` on a
-    * key subset picks an arbitrary row per key; `Sample`, `Limit`,
-    * `Offset` and `Tail` take an arbitrary subset — a Limit is
-    * order-stable only under a total-order child Sort, so all are
-    * classified unstable outright), and (c) no order-dependent
-    * aggregate (`first`/`last`/`any_value`, `collect_*`, and FLOAT
-    * `sum`/`avg`, whose values depend on partition evaluation order),
-    * and (d) no order-sensitive WINDOW function (round 22, ADVICE r21:
-    * rank-family and offset functions value ties arbitrarily under a
-    * non-total sort — a Filter over such a window is the Limit class —
-    * and row-count frames narrower than the partition slice by
-    * position; range frames and whole-partition aggregates stay
-    * admissible). A frame passing the gate re-evaluates to the same row set under
-    * every re-evaluation class the gate models; frames failing it are
-    * routed to the one-evaluation rebuild. The gate is deliberately
-    * conservative — false "nondeterministic" costs one bounded rebuild,
-    * false "deterministic" would be the ADVICE-r19 silent-wrong-result
-    * class. */
-  private[graft] def planIsDeterministic(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    val plan = df.queryExecution.analyzed
-    val rowSetUnstable = plan.exists {
-      case d: logical.Deduplicate =>
-        // distinct() (keys = every output column) is set-stable; a key
-        // SUBSET dedup picks an arbitrary survivor per key
-        val keyIds = d.keys.map(_.exprId).toSet
-        !d.child.output.forall(a => keyIds.contains(a.exprId))
-      case _: logical.DeduplicateWithinWatermark => true
-      case _: logical.Sample => true
-      case _: logical.GlobalLimit | _: logical.LocalLimit => true
-      case _: logical.Offset => true
-      case _: logical.Tail => true
-      case _ => false
-    }
-    def orderDependent(fn: AggregateFunction): Boolean = fn match {
-      case _: First | _: Last | _: AnyValue => true
-      case _: Collect[_] => true
-      case s: Sum => s.child.dataType match {
-        case org.apache.spark.sql.types.FloatType |
-            org.apache.spark.sql.types.DoubleType => true
-        case _ => false
-      }
-      case a: Average => a.child.dataType match {
-        case org.apache.spark.sql.types.FloatType |
-            org.apache.spark.sql.types.DoubleType => true
-        case _ => false
-      }
-      case _ => false
-    }
-    // Window functions whose VALUE depends on intra-partition row order
-    // (round 22, ADVICE r21 low): rank-family (`row_number`, `rank`,
-    // `dense_rank`, `percent_rank`, `ntile`, `cume_dist`) and offset
-    // (`lag`/`lead`/`nth_value`) functions assign arbitrary values to
-    // order-key ties unless the sort is total — and a Filter over such a
-    // window (top-k) then picks an arbitrary row SUBSET, the same silent
-    // class as Limit above. Proving a total order needs a uniqueness
-    // oracle this gate doesn't have, so any such window classifies
-    // unstable outright; plain aggregates over windows stay admissible
-    // unless their frame is a row-count frame narrower than the whole
-    // partition (row frames slice by position, which ties make arbitrary
-    // — range frames slice by VALUE and stay set-determined). The
-    // order-dependent AGGREGATE check below already walks into window
-    // expressions (`first`/`collect_*`/float sums over windows).
-    def windowUnstable(
-        we: org.apache.spark.sql.catalyst.expressions.WindowExpression): Boolean = {
-      import org.apache.spark.sql.catalyst.expressions._
-      we.windowFunction match {
-        case _: AggregateWindowFunction => true // rank family + ntile/cume_dist
-        case _: OffsetWindowFunction => true    // lag/lead/nth_value
-        case _ =>
-          we.windowSpec.frameSpecification match {
-            case f: SpecifiedWindowFrame =>
-              f.frameType == RowFrame &&
-                !(f.lower == UnboundedPreceding && f.upper == UnboundedFollowing)
-            case _ => false
-          }
-      }
-    }
-    !rowSetUnstable && plan.find { node =>
-      node.expressions.exists(_.exists {
-        case _: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] => true
-        case we: org.apache.spark.sql.catalyst.expressions.WindowExpression
-            if windowUnstable(we) => true
-        case ae: AggregateExpression if orderDependent(ae.aggregateFunction) => true
-        case e => !e.deterministic
-      })
-    }.isEmpty
   }
 
   /** Fold pending tombstones into postings and doclens physically,
@@ -1142,24 +953,17 @@ object Bm25IndexStore {
     // materializes, so the dictionary rebuild below reads exactly the
     // published rows without listing and re-reading the new tree
     // (disk-backed, freed with the RDD by the ContextCleaner)
-    val foldPostings: DataFrame => DataFrame = src =>
-      drop(deltas.fold(src)(d => src.unionByName(d)).distinct()).localCheckpoint(false)
     val published = graft.util.ArtifactTree.compact(spark, path, "postings", targetFiles,
-      foldPostings, partitionCols = Seq("tok_bucket"),
+      src => drop(deltas.fold(src)(d => src.unionByName(d)).distinct()).localCheckpoint(false),
+      partitionCols = Seq("tok_bucket"),
       graceVersions = graceVersions, graceMinAgeMs = graceMinAgeMs)
     if (deltas.nonEmpty) graft.util.ArtifactTree.remove(spark, path, "postings_deltas")
     // the term dictionary is rebuilt from the postings just published
     // (deltas folded, tombstones dropped), then stamped with that tree;
     // until the stamp lands it fails validation and serves fall back.
-    // A tree with no committed base (a legacy store, or one holding only
-    // append deltas) is first replaced by an empty base, so the
-    // compaction has a readable live tree to replace.
+    // The transform never reads the dictionary tree it replaces, so that
+    // tree is neither read nor required (a legacy store has none).
     val postingsTree = graft.util.ArtifactTree.resolve(spark, path, "postings")
-    val dictLive = new Path(graft.util.ArtifactTree.resolve(spark, path, "df"))
-    if (!dictLive.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new Path(dictLive, "_SUCCESS")))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DictSchema)
-        .write.mode("overwrite").parquet(dictLive.toString)
     val files = dictFiles(spark, postingsTree)
     graft.util.ArtifactTree.compact(spark, path, "df", files,
       _ => dictionaryOf(published, files), sortWithin = Seq("token"),

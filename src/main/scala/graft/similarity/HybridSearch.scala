@@ -209,7 +209,7 @@ object HybridSearch {
     *     query,
     *   - the lexical lists come from ONE
     *     [[Bm25IndexStore.serveBm25TopKBatch]] plan (postings scanned
-    *     twice TOTAL, static bucket pruning — the batched-BM25
+    *     ONCE per batch, static bucket pruning — the batched-BM25
     *     contract), ranked per query by the per-call `(score desc,
     *     doc_id asc)` tie rule,
     *   - the semantic lists come from ONE

@@ -195,7 +195,7 @@ object IndexStore {
       graceVersions: Int = 1,
       graceMinAgeMs: Long = 0L): Unit = {
     graft.util.ArtifactTree.compact(spark, path, "codes", targetFiles,
-      dropTombstoned(spark, path),
+      src => dropTombstoned(spark, path)(src),
       graceVersions = graceVersions, graceMinAgeMs = graceMinAgeMs)
     graft.util.ArtifactTree.remove(spark, path, "tombstones")
   }
@@ -213,7 +213,7 @@ object IndexStore {
       graceVersions: Int = 1,
       graceMinAgeMs: Long = 0L): Unit = {
     graft.util.ArtifactTree.compact(spark, path, "ivf_codes", targetFiles,
-      dropTombstoned(spark, path), partitionCols = Seq("cell"),
+      src => dropTombstoned(spark, path)(src), partitionCols = Seq("cell"),
       graceVersions = graceVersions, graceMinAgeMs = graceMinAgeMs)
     graft.util.ArtifactTree.remove(spark, path, "tombstones")
   }

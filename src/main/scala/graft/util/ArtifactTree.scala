@@ -101,8 +101,13 @@ object ArtifactTree {
   /** `transform` runs inside the rewrite (the place physical row drops —
     * tombstone folding — belong: compaction is the one job that already
     * rewrites every row, so a corpus-sized anti-join is in budget here
-    * and nowhere else). `partitionCols` preserves a partitioned layout
-    * (e.g. the IVF codes' cell directories, which serving's partition
+    * and nowhere else). It takes the live tree BY NAME: the tree is
+    * listed and schema-inferred only if the transform reads it, so a
+    * rewrite derived from other rows (the BM25 term dictionary, rebuilt
+    * from the postings just published) costs no read of the tree it
+    * replaces, and that tree need not exist. `partitionCols` preserves
+    * a partitioned layout (e.g. the IVF codes' cell directories, which
+    * serving's partition
     * pruning depends on); rows are clustered by those columns so each
     * partition directory lands in at most `targetFiles` files.
     *
@@ -128,7 +133,7 @@ object ArtifactTree {
       root: String,
       subdir: String,
       targetFiles: Int,
-      transform: DataFrame => DataFrame = identity,
+      transform: (=> DataFrame) => DataFrame = src => src,
       partitionCols: Seq[String] = Nil,
       graceVersions: Int = 1,
       graceMinAgeMs: Long = 0L,
@@ -155,7 +160,7 @@ object ArtifactTree {
     // recursiveFileLookup flattens streaming-delta subtrees but DISABLES
     // partition-column inference — a partitioned tree must go through
     // normal partition discovery or its partition columns vanish
-    val source =
+    lazy val source =
       if (partitionCols.isEmpty)
         spark.read.option("recursiveFileLookup", "true").parquet(live.toString)
       else spark.read.parquet(live.toString)

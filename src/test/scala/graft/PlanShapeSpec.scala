@@ -607,92 +607,54 @@ class PlanShapeSpec extends SparkSpec {
     Bm25IndexStore.writeBm25Index(syn, idx, "text", "doc_id", nBuckets = 16)
 
     // counter deltas across one full serve (plan built AND executed):
-    // (query-frame localCheckpoints, (query,term) collects, fallback
-    // unions, one-evaluation rebuilds)
-    def deltas(batch: DataFrame): (Long, Long, Long, Long) = {
+    // ((query,term) collects, fallback unions)
+    def deltas(batch: DataFrame): (Long, Long) = {
       val before = Bm25IndexStore.ServeProbe.snapshot()
       Bm25IndexStore.serveBm25TopKBatch(batch, idx, k = 3, roundTo = 6, pruneDf = 30L)
         .collect()
       val after = Bm25IndexStore.ServeProbe.snapshot()
-      (after._1 - before._1, after._2 - before._2,
-        after._3 - before._3, after._4 - before._4)
+      (after._1 - before._1, after._2 - before._2)
     }
 
     // (a) no hot term anywhere in the batch: the default path — NO
-    // checkpoint job, NO (query,term) collect (the b02f993 contract)
+    // (query,term) collect (the b02f993 contract)
     val noHot = Seq((1L, Seq("w1", "w2")), (2L, Seq("w3"))).toDF("query_id", "terms")
-    assert(deltas(noHot) == ((0L, 0L, 0L, 0L)),
+    assert(deltas(noHot) == ((0L, 0L)),
       "a no-hot-term batch must not touch the routing machinery")
 
     // (b) every index-present term hot: the vocabulary-level skip fires
-    // BEFORE the checkpoint — same zero-cost shape
+    // before any routing — same zero-cost shape
     val allHot = Seq((1L, Seq("the")), (2L, Seq("the"))).toDF("query_id", "terms")
-    assert(deltas(allHot) == ((0L, 0L, 0L, 0L)),
+    assert(deltas(allHot) == ((0L, 0L)),
       "an all-hot batch must short-circuit to the unpruned plan")
 
-    // (c) hot + essential, proofs pass: a DETERMINISTIC batch reuses the
-    // trigger evaluation's artifacts with NO checkpoint job (round 21,
-    // VERDICT r20 #3) and no rebuild — the (query,term) collect is the
+    // (c) hot + essential, proofs pass: the (query,term) collect is the
     // routing's only extra action
     val engaged = Seq((1L, Seq("the", "w1")), (5L, Seq("the", "w4", "w5")))
       .toDF("query_id", "terms")
-    assert(deltas(engaged) == ((0L, 1L, 0L, 0L)),
-      "engaged deterministic batch: zero checkpoints, one collect, no fallback, no rebuild")
+    assert(deltas(engaged) == ((1L, 0L)),
+      "engaged batch: one collect, no fallback")
 
     // (d) mixed batch with per-query fallbacks (all-hot query, doomed
     // essential): the fallback is ONE union of the precomputed unpruned
-    // tail — still no checkpoint for the deterministic frame (no
-    // recursion, round 20: the r19 recursion paid a complete second serve)
+    // tail (no recursion, round 20: the r19 recursion paid a complete
+    // second serve)
     val mixed = Seq(
       (1L, Seq("the", "w1")),
       (2L, Seq("the")),
       (4L, Seq("the", "zzz_nope"))).toDF("query_id", "terms")
-    assert(deltas(mixed) == ((0L, 1L, 1L, 0L)),
+    assert(deltas(mixed) == ((1L, 1L)),
       "failed-proof fallback must reuse the batch's collected stats, not recurse")
 
     // (e) a NONDETERMINISTIC caller plan (rand() in the frame): the
-    // engaged path rebuilds every artifact from the checkpointed frame
-    // (ADVICE r19 — one evaluation end to end). The rand() guard here is
-    // always-true, so the row set is stable and the result must STILL be
+    // batch is read once, so the engaged path routes exactly like (c).
+    // The rand() guard here is always-true, so the result must STILL be
     // bitwise the unpruned serve of the same rows.
     import org.apache.spark.sql.functions.{array, lit, rand, when}
     def ndBatch = engaged.select($"query_id",
       when(rand(7) >= -1.0, $"terms").otherwise(array(lit("w2"))).as("terms"))
-    assert(!Bm25IndexStore.planIsDeterministic(ndBatch),
-      "the rand()-guarded frame must classify nondeterministic")
-    assert(Bm25IndexStore.planIsDeterministic(engaged))
-    // the documented conservative branch: a subquery expression (whose
-    // nested plan the expression walk cannot see into) classifies
-    // nondeterministic, routing such frames to the safe rebuild
-    engaged.createOrReplaceTempView("psp_engaged")
-    syn.createOrReplaceTempView("psp_syn")
-    val withSubquery = spark.sql(
-      "select * from psp_engaged where query_id <= (select max(doc_id) from psp_syn)")
-    assert(!Bm25IndexStore.planIsDeterministic(withSubquery),
-      "a subquery expression must classify nondeterministic (conservative)")
-    // round 22 (ADVICE r21 low): rank-family top-k over a NON-TOTAL sort
-    // picks an arbitrary subset on ties — the Limit class. Any rank-family
-    // window classifies row-set-unstable; a whole-partition aggregate
-    // window (set-determined) stays admissible.
-    import org.apache.spark.sql.expressions.{Window => W}
-    val byConstant = W.partitionBy($"query_id").orderBy(lit(1))
-    val rankTopK = engaged
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(byConstant))
-      .filter($"rn" === 1).drop("rn")
-    assert(!Bm25IndexStore.planIsDeterministic(rankTopK),
-      "rank-family window top-k must classify row-set-unstable")
-    val partitionAgg = engaged.withColumn("n",
-      org.apache.spark.sql.functions.count(lit(1)).over(W.partitionBy($"query_id")))
-    assert(Bm25IndexStore.planIsDeterministic(partitionAgg),
-      "a whole-partition count window is set-determined and stays admissible")
-    // row-count frames narrower than the partition slice by position
-    val rowFrame = engaged.withColumn("m",
-      org.apache.spark.sql.functions.max($"query_id")
-        .over(W.partitionBy(lit(1)).orderBy($"query_id").rowsBetween(-1, 0)))
-    assert(!Bm25IndexStore.planIsDeterministic(rowFrame),
-      "a sub-partition row frame must classify row-set-unstable")
-    assert(deltas(ndBatch) == ((1L, 1L, 0L, 1L)),
-      "a nondeterministic engaged batch must rebuild from the checkpoint")
+    assert(deltas(ndBatch) == ((1L, 0L)),
+      "a nondeterministic engaged batch routes like a deterministic one")
     val ndRows = Bm25IndexStore
       .serveBm25TopKBatch(ndBatch, idx, k = 3, roundTo = 6, pruneDf = 30L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -702,6 +664,6 @@ class PlanShapeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, -t._3, t._2)).toSeq
     assert(ndRows == offRows,
-      "the rebuilt engaged path must stay bitwise the unpruned serve")
+      "the engaged path over a nondeterministic frame must stay bitwise the unpruned serve")
   }
 }

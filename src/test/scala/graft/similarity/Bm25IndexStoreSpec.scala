@@ -199,6 +199,52 @@ class Bm25IndexStoreSpec extends SparkSpec {
     assert(auto.filter(_._1 == 1L) == pc)
   }
 
+  test("batched serve reads its query frame once: a frame whose rows change between reads " +
+      "serves its first read on the plain and the MaxScore route") {
+    import spark.implicits._
+    // the prune spec's hot-term corpus: 'the' df=60 (hot at pruneDf=30),
+    // six topic words df=10 (essential)
+    val syn = (0L until 60L).map(i => (i, s"the w${i % 6} filler$i the tail"))
+      .toDF("doc_id", "text")
+    val dir = graft.util.Scratch.dir("bm25-moving").toString
+    Bm25IndexStore.writeBm25Index(syn, dir, "text", "doc_id", nBuckets = 16)
+    // a UDF declared deterministic that is not: the terms it returns for
+    // a query id follow a flag the test flips between the serve call
+    // and its collect, as a source that moves between reads would
+    def servedAgainst(a: Map[Long, Seq[String]], b: Map[Long, Seq[String]]) = {
+      val terms = udf { (qid: Long) =>
+        if (Bm25IndexStoreSpec.termSetB) b(qid) else a(qid) }
+      val batch = a.keys.toSeq.sorted.toDF("query_id")
+        .select(col("query_id"), terms(col("query_id")).as("terms"))
+      Bm25IndexStoreSpec.termSetB = false
+      val served = try {
+        val df = Bm25IndexStore.serveBm25TopKBatch(batch, dir, k = 3, roundTo = 6, pruneDf = 30L)
+        Bm25IndexStoreSpec.termSetB = true
+        df.collect()
+      } finally Bm25IndexStoreSpec.termSetB = false
+      val perCall = a.toSeq.sortBy(_._1).flatMap { case (qid, ts) =>
+        Bm25IndexStore.serveBm25TopK(spark, dir, ts, k = 3, roundTo = 6, pruneDf = 30L)
+          .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+      }
+      (served.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(t => (t._1, -t._3, t._2)).toSeq, perCall.sortBy(t => (t._1, -t._3, t._2)))
+    }
+    // no hot term: the plain route
+    val (plain, plainPerCall) = servedAgainst(
+      Map(1L -> Seq("w1", "w2"), 2L -> Seq("w3")),
+      Map(1L -> Seq("w4"), 2L -> Seq("w5", "w0")))
+    assert(plainPerCall.nonEmpty)
+    assert(plain == plainPerCall, s"plain route served\n$plain\nvs per-call\n$plainPerCall")
+    // hot + essential (q1 passes the proof) and all-hot (q2 falls back):
+    // the engaged MaxScore route
+    val (engaged, engagedPerCall) = servedAgainst(
+      Map(1L -> Seq("the", "w1"), 2L -> Seq("the")),
+      Map(1L -> Seq("the", "w1"), 2L -> Seq("w2")))
+    assert(engagedPerCall.map(_._1).toSet == Set(1L, 2L))
+    assert(engaged == engagedPerCall,
+      s"engaged route served\n$engaged\nvs per-call\n$engagedPerCall")
+  }
+
   test("batched serve honors tombstones exactly like the per-call path") {
     import spark.implicits._
     val dir = newIndex(docs)
@@ -569,4 +615,10 @@ class Bm25IndexStoreSpec extends SparkSpec {
       assert(Bm25IndexStore.bucketOf(t, 16) == b, s"bucket mismatch for '$t'")
     }
   }
+}
+
+object Bm25IndexStoreSpec {
+  /** Which term set the moving-frame spec's UDF returns; tasks run in
+    * the driver JVM under `local[*]`, so they read this field. */
+  @volatile var termSetB = false
 }

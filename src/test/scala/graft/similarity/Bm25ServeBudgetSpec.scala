@@ -68,6 +68,32 @@ class Bm25ServeBudgetSpec extends SparkSpec {
     assert(perCall16 == perCall256, "a per-call serve's job count must not grow with n_buckets")
     assert(batch16 == batch256, "a batched serve's job count must not grow with n_buckets")
     assert(perCall16 <= 3, s"per-call serve ran $perCall16 jobs")
+    assert(batch16 <= 10, s"batched serve ran $batch16 jobs")
+  }
+
+  test("a warm engaged MaxScore batch runs <= 20 jobs, the same at 16 and 256 buckets") {
+    import spark.implicits._
+    // 'the' in all 60 docs (hot at pruneDf = 30), six topic words in 10
+    // docs each (essential): q1 and q5 pass the pruning proof
+    val hotCorpus = (0L until 60L).map(i => (i, s"the w${i % 6} filler$i the tail"))
+      .toDF("doc_id", "text")
+    val batch = Seq((1L, Seq("the", "w1")), (5L, Seq("the", "w4", "w5")))
+      .toDF("query_id", "terms")
+    def engaged(nBuckets: Int): Int = {
+      val dir = newIndex(hotCorpus, nBuckets)
+      def serve() = Bm25IndexStore
+        .serveBm25TopKBatch(batch, dir, k = 3, roundTo = 6, pruneDf = 30L).collect()
+      serve()
+      val before = Bm25IndexStore.ServeProbe.queryTermCollects.get()
+      val jobs = jobsOf(serve())
+      assert(Bm25IndexStore.ServeProbe.queryTermCollects.get() == before + 1,
+        "the batch must take the MaxScore route")
+      jobs
+    }
+    val (at16, at256) = (engaged(16), engaged(256))
+    info(s"warm engaged batch jobs: $at16 / $at256 (nBuckets 16 / 256)")
+    assert(at16 == at256, "an engaged batch's job count must not grow with n_buckets")
+    assert(at16 <= 20, s"engaged batch ran $at16 jobs")
   }
 
   test("warm per-call serves with fresh terms compile no new classes") {

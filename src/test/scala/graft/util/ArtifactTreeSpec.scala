@@ -184,4 +184,13 @@ class ArtifactTreeSpec extends SparkSpec {
       .toArray.map(_.toString).count(_.endsWith(".parquet"))
     assert(files <= 2, s"expected <= 2 parquet files, got $files")
   }
+
+  test("a transform that ignores its source reads nothing: compact publishes over a missing tree") {
+    import spark.implicits._
+    val root = Scratch.dir("atree-unread").toString
+    ArtifactTree.compact(spark, root, "data", targetFiles = 1,
+      transform = _ => (1 to 10).map(i => (i.toLong, "derived")).toDF("id", "gen"))
+    assert(ArtifactTree.resolve(spark, root, "data").endsWith("/data__v1"))
+    assert(readGen(root) == Set("derived"))
+  }
 }
